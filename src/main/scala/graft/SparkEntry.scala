@@ -744,7 +744,8 @@ object SparkEntry {
       val canonicalOk = ivfClusters.groupBy("cluster_id")
         .agg(min("vec_id").as("mn"))
         .agg(min(col("cluster_id") === col("mn")).as("labels_canonical_ok"))
-      val exactStats = PipelineOps.mutualKnnClusters(e, 3)
+      val exactStats = PipelineOps.mutualKnnClusters(e, 3,
+        graph = Some(exactG.select(col("vec_id"), col("nb_id"))))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("cluster_id")).as("n_clusters_exact"))
       PipelineOps.recallStats(ivfM, exactM, Seq("ia", "ib"), 600)

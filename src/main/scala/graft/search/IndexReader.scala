@@ -33,7 +33,7 @@ trait Warmer {
   */
 final class DocFreqWarmer(field: String, terms: Seq[String]) extends Warmer {
   override def warm(searcher: Searcher): Unit =
-    searcher.docFreqsPublic(terms.map(field -> _).toSet)
+    searcher.docFreqs(terms.map(field -> _).toSet)
 }
 
 /** Long-lived handle dispensing point-in-time [[Searcher]]s — the

@@ -39,7 +39,7 @@ object MoreLikeThis {
       }
     if (tf.isEmpty) return Query.Nothing
     val n = searcher.manifest.totalDocs
-    val dfs = searcher.docFreqsPublic(tf.keySet.map(field -> _))
+    val dfs = searcher.docFreqs(tf.keySet.map(field -> _))
     val scored = tf.toSeq.flatMap { case (t, f) =>
       val df = dfs((field, t))
       if (df < cfg.minDocFreq || df == 0 ||
@@ -186,7 +186,7 @@ object Snippets {
     // plan() resolves expansion queries first, so fuzzy/regex/prefix terms
     // highlight too (richer than the reference's query_terms on automata)
     val terms = CQuery.termsOf(searcher.plan(q)).filter(_._1 == field)
-    val dfs = searcher.docFreqsPublic(terms)
+    val dfs = searcher.docFreqs(terms)
     val weights: Map[String, Double] = terms.toSeq.collect {
       case key @ (_, t) if dfs.getOrElse(key, 0L) > 0L =>
         t -> 1.0 / (1.0 + dfs(key).toDouble)

@@ -5,7 +5,7 @@ import graft.codec.SegmentPostings
 /** Sorted doc-id iterator with scoring — the reference's `DocSet` + `Scorer`
   * contracts (`/root/reference/src/docset.rs:18-167`, `src/query/scorer.rs`)
   * as a partition-local kernel abstraction. These never cross the Dataset
-  * boundary: they live inside `flatMapGroups` per segment (SURVEY.md §1.1).
+  * boundary: they live inside the per-segment kernel tasks (SURVEY.md §1.1).
   */
 trait Scorer {
   def doc: Int

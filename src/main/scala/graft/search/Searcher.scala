@@ -1,20 +1,29 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{IndexManifest, PostingRow, Snapshots}
 
 /** Point-in-time searcher over an index directory — the reference's
   * `Searcher` (`/root/reference/src/core/searcher.rs:69`): the manifest is
-  * the snapshot; every query runs the two-phase plan of SURVEY.md §3.2:
+  * the snapshot. Every kernel-running call takes ONE path, the reference's
+  * `search_with_executor` (`searcher.rs:220-236`, SURVEY.md §3.2); a single
+  * `topDocs` / `count` is a batch of one:
   *
   *   1. driver: dictionary expansion (fuzzy/regex/range/set) + global stats
-  *      (doc freqs via one pruned aggregate; N, totalTokens from the
-  *      manifest) -> BM25 weights -> broadcast compiled query;
-  *   2. executors: per-segment scorer DAG + WAND top-k inside
-  *      `flatMapGroups` (one task per segment = the rayon fan-out,
-  *      `src/core/executor.rs:11-37`);
-  *   3. driver: TopNComputer merge of per-segment fruits, then a broadcast
+  *      (doc freqs via one pruned aggregate per batch, memoized; N,
+  *      totalTokens from the manifest) -> BM25 weights -> broadcast
+  *      compiled queries;
+  *   2. executors ([[fanOut]]): one pruned scan of the batch's rows, routed
+  *      by an exact partitioner to one task per (segment, query shard);
+  *      each task runs its queries' scorer DAG + WAND top-k
+  *      (`collect_segment`; the rayon fan-out, `src/core/executor.rs:11-37`);
+  *   3. driver: TopNComputer merge of each query's per-segment fruits
+  *      (`merge_fruits`, O(segments × k) per query), then one broadcast
   *      join back to the docmap for stored fields.
   *
   * Everything reaching Parquet is pruned: only query terms' rows (plus the
@@ -67,8 +76,6 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
       col("ts").as("warc_ts"), col("lang")) ++ manifest.fastFields.map(f => col(f.name)): _*)
   }
 
-  private val segBaseBits = 32
-
   /** Tombstoned (field, term) pairs applicable per segment (opstamp rule);
     * their postings ride along in every pruned kernel read so executors can
     * assemble the dead-doc set without an extra job.
@@ -105,11 +112,15 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   private lazy val allDeleteTerms: Set[(String, String)] =
     deleteTermsBySeg.values.flatten.toSet ++
       deleteCqsAll.flatMap(CQuery.termsOf)
-  private lazy val bDeletes = spark.sparkContext.broadcast(deleteTermsBySeg)
-  private lazy val bDelQueries = spark.sparkContext.broadcast(deleteQueriesBySeg)
-  // primary text field name, shipped to kernel tasks so per-field norms
-  // resolution can fall back to it (json paths use the text field's norms)
-  private lazy val bPrimaryField = spark.sparkContext.broadcast(manifest.textField)
+
+  /** Everything a kernel task needs besides its rows and queries — fixed
+    * per snapshot, so it is broadcast once ([[Searcher.makeContext]] reads
+    * it; `explain` / `resolveDeadDocs` use it driver-side).
+    */
+  private lazy val kernelState = Searcher.KernelState(
+    manifest.segments.map(m => m.segment -> m.numDocs).toMap,
+    deleteTermsBySeg, manifest.textField, deleteQueriesBySeg)
+  private lazy val bKernelState = spark.sparkContext.broadcast(kernelState)
 
   /** Per-text-field token totals (the BM25 average-field-length statistic,
     * `Bm25Weight::for_terms` avg_fieldnorm): summed from each field's norms
@@ -123,7 +134,7 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
       .as[(String, Long)].collect().toMap
 
   /** OR-condition matching a set of (field, term) pairs. */
-  private def termsCond(terms: Set[(String, String)]): org.apache.spark.sql.Column =
+  private def termsCond(terms: Set[(String, String)]): Column =
     if (terms.isEmpty) lit(false)
     else terms.groupBy(_._1).map { case (f, ts) =>
       col("field") === f && col("term").isin(ts.map(_._2).toSeq: _*)
@@ -133,7 +144,7 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * rides the same pruned scan (the sorted `term` column makes these
     * row-group range prunes, the dictionary-range analog of the FST walk).
     */
-  private def rangesCond(cqs: Iterable[CQuery]): Option[org.apache.spark.sql.Column] = {
+  private def rangesCond(cqs: Iterable[CQuery]): Option[Column] = {
     val rs = cqs.flatMap(CQuery.rangesOf).toSeq.distinct
     if (rs.isEmpty) None
     else Some(rs.map { r =>
@@ -143,6 +154,16 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
       preds.reduce(_ && _)
     }.reduce(_ || _))
   }
+
+  /** The pruned read of a kernel task: the compiled queries' terms and
+    * typed ranges, every tombstone's own term and range rows (tasks
+    * assemble the dead-doc set from them), the norms rows (one per text
+    * field per segment) and `extra`.
+    */
+  private def kernelCond(cqs: Seq[CQuery], extra: Option[Column] = None): Column =
+    (Seq(termsCond(cqs.flatMap(CQuery.termsOf).toSet ++ allDeleteTerms),
+      col("field") === PostingRow.NormsField) ++ extra ++ rangesCond(cqs ++ deleteCqsAll))
+      .reduce(_ || _)
 
   // ------------------------------------------------------------- planning
 
@@ -206,7 +227,7 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * prune the walk (the reference's automaton-prefix FST seek,
     * `automaton_weight.rs:37-55`).
     */
-  private def regexPred(p: String): org.apache.spark.sql.Column = {
+  private def regexPred(p: String): Column = {
     val pred = col("term").rlike(s"^(?:$p)$$")
     val pre = Searcher.literalPrefix(p)
     if (pre.isEmpty) pred else col("term").startsWith(pre) && pred
@@ -220,23 +241,22 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   /** Dictionary scan: distinct terms of `field` matching `pred` (capped).
     * Reads only the (field, term) columns — Parquet column pruning.
     */
-  def expandTerms(field: String, pred: org.apache.spark.sql.Column, max: Int = 1024): Seq[String] =
+  def expandTerms(field: String, pred: Column, max: Int = 1024): Seq[String] =
     postingsDF
       .where(col("field") === field && !col("field").startsWith("__") && pred)
       .select("term").distinct().orderBy("term").limit(max)
       .as[String].collect().toSeq
-
-  /** Global doc freqs for a set of terms: one pruned scan + tiny aggregate
-    * (`Searcher::doc_freq`, searcher.rs:133, summed across segments).
-    */
-  def docFreqsPublic(terms: Set[(String, String)]): Map[(String, String), Long] = docFreqs(terms)
 
   // memoized per-snapshot: the manifest is immutable, so a term's global df
   // never changes for this Searcher — repeat batches over warm terms skip
   // the stats job entirely
   private val dfCache = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
-  private def docFreqs(terms: Set[(String, String)]): Map[(String, String), Long] = {
+  /** Global doc freqs for a set of terms: one pruned scan + tiny aggregate
+    * for the terms not yet memoized (`Searcher::doc_freq`, searcher.rs:133,
+    * summed across segments).
+    */
+  def docFreqs(terms: Set[(String, String)]): Map[(String, String), Long] = {
     if (terms.isEmpty) return Map.empty[(String, String), Long].withDefaultValue(0L)
     val missing = terms.filterNot(dfCache.contains)
     if (missing.nonEmpty) {
@@ -280,10 +300,7 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   }
 
   /** Query -> stats-bound CQuery (the Weight construction). */
-  def plan(q0: Query): CQuery = {
-    val q = expand(q0)
-    planWith(q, docFreqs(collectTerms(q)))
-  }
+  def plan(q: Query): CQuery = planAll(Seq(q)).head
 
   private def planWith(q: Query, dfs: Map[(String, String), Long]): CQuery = {
     val n = manifest.totalDocs
@@ -323,316 +340,175 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     go(q, 1.0f)
   }
 
-  /** Batched top-k: MANY queries in ONE Spark job — the bulk-scoring path
-    * (scoring a query log / training-pair generation). One shared stats
-    * aggregate, one pruned scan of the union of all query terms, one task
-    * per segment running every query's kernel against that segment, one
-    * collect, per-query driver merges, one doc-fetch join. Per-query driver
-    * latency amortizes away; the job is kernel-CPU-bound — this is the
-    * query-throughput scaling axis.
+  // ------------------------------------------------------------- execution
+
+  /** Query shards per segment for a batch of `nQueries`. A merged index can
+    * have fewer segments than the cluster has cores — one task per segment
+    * would leave most of a 1000-executor cluster idle on a 2-segment index —
+    * so a batch is split into up to 8 shards to fill the cores.
+    * `spark.graft.queryShards` forces the count (at most one shard per query).
     */
-  def batchTopDocs(qs: Seq[Query], k: Int): Seq[Array[SearchHit]] = {
-    // kernel stages are CPU-heavy but shuffle-light; AQE's bytes-based
-    // coalescing would fold them onto too few cores. Kernel sharding is one
-    // task per segment — the session's shuffle.partitions (sized for data
-    // volume) would hash several segments into one task and leave cores
-    // idle on the last wave.
-    val overrides = Seq(
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      // AQE's per-stage materialization + replan adds fixed latency and the
-      // kernel job's two stages are already statically sized (one task per
-      // segment; one reducer per query group)
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> math.max(manifest.segments.size, 1).toString)
-    val prev = overrides.map { case (key, _) => key -> spark.conf.getOption(key) }
-    overrides.foreach { case (key, v) => spark.conf.set(key, v) }
-    try batchTopDocsInner(qs, k)
-    finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
+  private def queryShardCount(nQueries: Int): Int = {
+    val n = spark.conf.getOption(Searcher.QueryShardsKey) match {
+      case Some(v) =>
+        val forced = v.trim.toIntOption.getOrElse(0)
+        require(forced >= 1, s"${Searcher.QueryShardsKey} must be an integer >= 1, got '$v'")
+        forced
+      case None =>
+        val nseg = math.max(manifest.segments.size, 1)
+        math.min(8, (spark.sparkContext.defaultParallelism + nseg - 1) / nseg)
     }
+    math.max(1, math.min(nQueries, n))
   }
 
-  private val timing = sys.env.contains("GRAFT_QUERY_TIMING")
-  @inline private def timed[T](label: String)(f: => T): T =
-    if (!timing) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[qphase] $label%-8s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  /** Many counts in ONE job: shared stats aggregate, one pruned scan of the
-    * union of all query terms, one kernel task per segment running every
-    * query's count, driver-side summing of the tiny per-segment results.
+  /** The one executor fan-out behind every kernel-running call: a pruned
+    * read of [[kernelCond]], routed by an exact partitioner to one task per
+    * (segment, query shard), where `kernel(segment, ctx, rows, queries)`
+    * runs over the segment's context, its raw rows and the (query, tag)
+    * pairs of the task's shard (the i-th query belongs to shard
+    * i % nShards).
+    *
+    * The partitioner keys on the manifest's segment ordinal: Spark's hashed
+    * exchange puts n keys into n buckets with collisions (measured on a
+    * 32-segment index, one task carried 3 segments, 3.2 s, while others
+    * idled at a 1.1 s median). Each (segment, shard) task receives only the
+    * rows its own queries' terms/ranges touch, plus the norms and tombstone
+    * rows every kernel needs, so sharding adds only cross-shard term overlap
+    * and nShards copies of those shared rows to the exchange. Results are
+    * bit-identical at any shard count: every query sees the complete
+    * postings of its own terms.
     */
-  def batchCount(qs: Seq[Query]): Seq[Long] = {
-    val cqs = planAll(qs)
-    val live = cqs.zipWithIndex.filter(_._1 != CQuery.CEmpty)
-    if (live.isEmpty) return qs.map(_ => 0L)
-    val bcq = spark.sparkContext.broadcast(live)
-    val bNumDocs = spark.sparkContext.broadcast(numDocsBySeg)
-    val bDel = bDeletes
-    val bDelQ = bDelQueries
-    val ptf = bPrimaryField
-    val allTerms = live.map(_._1).flatMap(CQuery.termsOf).toSet
-    val termCond = termsCond(allTerms ++ allDeleteTerms)
-    val normsCond = col("field") === PostingRow.NormsField // all text fields' norms rows (tiny: one row per field per segment)
-    val baseCond = termCond || normsCond
-    val countCond = rangesCond(live.map(_._1) ++ deleteCqsAll).map(baseCond || _).getOrElse(baseCond)
-    val nShards = queryShardCount(live.size)
-    def countShard(seg: Int, shard: Int, it: Iterator[PostingRow]): Iterator[(Int, Long)] = {
-      val ctx = Searcher.makeContext(it, bNumDocs.value, seg, bDel.value, ptf.value, bDelQ.value)
-      bcq.value.iterator.zipWithIndex
-        .filter { case (_, i) => i % nShards == shard }
-        .map { case ((cq, qi), _) => (qi, QueryKernel.count(cq, ctx)) }
-    }
-    val countRows = postingsDF.where(countCond).as[PostingRow]
-    val counts = (if (nShards <= 1) perSegment(countRows)((seg, it) => countShard(seg, 0, it))
-      else perSegmentShard(countRows, live, nShards)(countShard))
-      .collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    qs.indices.map(qi => counts.getOrElse(qi, 0L))
+  private def fanOut[T: Encoder : ClassTag](queries: Seq[(CQuery, Int)],
+      extra: Option[Column] = None)(
+      kernel: (Int, QueryKernel.SegmentContext, Array[PostingRow], Iterator[(CQuery, Int)]) =>
+        Iterator[T]): Dataset[T] = {
+    val cqs = queries.map(_._1)
+    val nShards = queryShardCount(cqs.size)
+    val segIds = manifest.segmentIds.toArray
+    val ord = segIds.zipWithIndex.toMap
+    val rows = postingsDF.where(kernelCond(cqs, extra)).as[PostingRow].rdd
+    val keyed: RDD[(Int, PostingRow)] =
+      if (nShards == 1) rows.map(r => (ord.getOrElse(r.segment, 0), r))
+      else {
+        val termShards = cqs.zipWithIndex
+          .flatMap { case (cq, i) => CQuery.termsOf(cq).map(_ -> i % nShards) }
+          .groupBy(_._1).map { case (t, ss) => t -> ss.map(_._2).distinct.toArray }
+        val shardRanges = Array.tabulate(nShards)(s =>
+          cqs.indices.filter(_ % nShards == s).flatMap(i => CQuery.rangesOf(cqs(i))).toArray)
+        val bRoute = spark.sparkContext.broadcast(
+          (termShards, shardRanges, allDeleteTerms, deleteCqsAll.flatMap(CQuery.rangesOf).toArray))
+        rows.flatMap { r =>
+          val (t2s, ranges, delTerms, delRanges) = bRoute.value
+          val base = ord.getOrElse(r.segment, 0) * nShards
+          val shards =
+            if (r.field == PostingRow.NormsField || delTerms.contains((r.field, r.term)) ||
+                delRanges.exists(Searcher.covers(_, r))) Iterator.range(0, nShards)
+            else {
+              val direct = t2s.getOrElse((r.field, r.term), Array.emptyIntArray)
+              direct.iterator ++ Iterator.range(0, nShards).filter(s =>
+                !direct.contains(s) && ranges(s).exists(Searcher.covers(_, r)))
+            }
+          shards.map(s => (base + s, r))
+        }
+      }
+    val nParts = math.max(segIds.length, 1) * nShards
+    val shuffled = new ShuffledRDD[Int, PostingRow, PostingRow](keyed, new Partitioner {
+      override def numPartitions: Int = nParts
+      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+    })
+    // Kryo for this one exchange: the default RDD shuffle serializer (Java)
+    // measured 4-5x slower writing PostingRow's byte-array blobs
+    shuffled.setSerializer(new KryoSerializer(spark.sparkContext.getConf))
+    val bState = bKernelState
+    val bQueries = spark.sparkContext.broadcast(queries)
+    spark.createDataset(shuffled.mapPartitionsWithIndex { (p, it) =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val seg = segIds(p / nShards)
+        val segRows = it.map(_._2).toArray
+        val mine = bQueries.value.iterator.zipWithIndex
+          .collect { case (q, i) if i % nShards == p % nShards => q }
+        kernel(seg, Searcher.makeContext(segRows.iterator, bState.value, seg), segRows, mine)
+      }
+    })
   }
 
-  private def batchTopDocsInner(qs: Seq[Query], k: Int): Seq[Array[SearchHit]] = {
-    val cqs = timed("plan")(planAll(qs))
-    val live = cqs.zipWithIndex.filter(_._1 != CQuery.CEmpty)
-    if (live.isEmpty) return qs.map(_ => Array.empty[SearchHit])
-    val bcq = spark.sparkContext.broadcast(live)
-    val bNumDocs = spark.sparkContext.broadcast(numDocsBySeg)
-    val kk = k
-    val allTerms = live.map(_._1).flatMap(CQuery.termsOf).toSet
-    val termCond = termsCond(allTerms ++ allDeleteTerms)
-    val normsCond = col("field") === PostingRow.NormsField // all text fields' norms rows (tiny: one row per field per segment)
-    val baseCond = termCond || normsCond
-    val rowCond = rangesCond(live.map(_._1) ++ deleteCqsAll).map(baseCond || _).getOrElse(baseCond)
-    val rows = postingsDF.where(rowCond).as[PostingRow]
-    val bDel = bDeletes
-    val bDelQ = bDelQueries
-    val ptf = bPrimaryField
-    val nShards = queryShardCount(live.size)
-    def runShard(seg: Int, shard: Int, it: Iterator[PostingRow]): Iterator[(Int, Long, Float)] = {
-      val ctx = Searcher.makeContext(it, bNumDocs.value, seg, bDel.value, ptf.value, bDelQ.value)
-      bcq.value.iterator.zipWithIndex
-        .filter { case (_, i) => i % nShards == shard }
-        .flatMap { case ((cq, qi), _) =>
+  /** Top-k for a batch: each segment's task collects every query's
+    * top-(offset + k) fruits (a doc ranked k-th globally can be the
+    * (offset + k)-th of one segment), the driver merges each query's fruits
+    * and drops the first `offset`, and one doc-fetch join serves every
+    * query's page. Ranks number the page (offset + 1 ...).
+    */
+  private def topK(qs: Seq[Query], k: Int, offset: Int): Seq[Array[SearchHit]] = {
+    require(offset >= 0, "offset must be >= 0")
+    val live = planAll(qs).zipWithIndex.filter(_._1 != CQuery.CEmpty)
+    val kk = k + offset
+    val fruits =
+      if (live.isEmpty) Array.empty[(Int, Long, Float)]
+      else fanOut(live) { (seg, ctx, _, mine) =>
+        mine.flatMap { case (cq, qi) =>
           val topN = new TopNComputer(kk)
           QueryKernel.topK(cq, ctx, kk, topN, seg.toLong << 32)
           topN.intoSortedVec().iterator.map { case (score, addr) => (qi, addr, score) }
         }
-    }
-    val local =
-      if (nShards <= 1) perSegment(rows)((seg, it) => runShard(seg, 0, it))
-      else perSegmentShard(rows, live, nShards)(runShard)
-    // per-query fruit merge as a second (tiny) shuffle stage — executor-side,
-    // so the merge parallelizes with the batch instead of serializing on the
-    // driver (collector merge_fruits, distributed)
-    val merged: Map[Int, Array[(Float, Long)]] = timed("kernel")(local
-      .groupByKey(_._1)
-      .mapGroups { (qi, it) =>
-        val m = new TopNComputer(kk)
-        it.toArray.sortBy(_._2).foreach { case (_, addr, score) => m.push(score, addr) }
-        (qi, m.intoSortedVec().map { case (s, a) => (s, a) })
-      }
-      .collect().map { case (qi, arr) => qi -> arr }.toMap)
-    // one doc-fetch join for every query's survivors
-    val addrRows = merged.toSeq.flatMap { case (qi, hits) =>
-      hits.zipWithIndex.map { case ((score, addr), rank) =>
-        (qi, (addr >>> 32).toInt, (addr & 0xffffffffL).toInt, score, rank + 1)
+      }.collect()
+    // merge fruits: pushes must arrive in ascending global address order
+    val addrRows = fruits.groupBy(_._1).toSeq.flatMap { case (qi, fs) =>
+      val merged = new TopNComputer(kk)
+      fs.sortBy(_._2).foreach { case (_, addr, score) => merged.push(score, addr) }
+      merged.intoSortedVec().drop(offset).zipWithIndex.map { case ((score, addr), rank) =>
+        (qi, (addr >>> 32).toInt, (addr & 0xffffffffL).toInt, score, offset + rank + 1)
       }
     }
     if (addrRows.isEmpty) return qs.map(_ => Array.empty[SearchHit])
+    // fetch stored fields: broadcast the tiny pages against the docmap
     val addrDF = spark.createDataFrame(addrRows).toDF("qi", "segment", "docId", "score", "rank")
-    val segs = addrRows.map(_._2).distinct
-    val fetched = timed("fetch")(docmapDF
-      .where(col("segment").isin(segs: _*))
+    val fetched = docmapDF
+      .where(col("segment").isin(addrRows.map(_._2).distinct: _*))
       .join(broadcast(addrDF), Seq("segment", "docId"))
       .select("qi", "rank", "url", "score", "segment", "docId")
       .collect()
-      .map(r => (r.getInt(0), SearchHit(r.getInt(1), r.getString(2), r.getFloat(3), r.getInt(4), r.getInt(5))))
-      .groupBy(_._1))
-    qs.indices.map(qi => fetched.getOrElse(qi, Array.empty).map(_._2).sortBy(_.rank)).toSeq
+      .groupBy(_.getInt(0))
+    qs.indices.map(qi => fetched.getOrElse(qi, Array.empty[org.apache.spark.sql.Row])
+      .map(r => SearchHit(r.getInt(1), r.getString(2), r.getFloat(3), r.getInt(4), r.getInt(5)))
+      .sortBy(_.rank))
   }
-
-  // ------------------------------------------------------------- execution
-
-  /** Exactly one kernel task per segment. The Dataset `groupByKey(_.segment)`
-    * path hashes segment ids into shuffle partitions, and n keys into n
-    * buckets collide (birthday): measured on a 32-segment index, one task
-    * carried 3 segments (3.2 s) while others idled (median 1.1 s), costing
-    * ~15% of the batch kernel stage's makespan. An explicit partitioner on
-    * the manifest's segment ordinal restores the one-task-per-segment
-    * contract the executor fan-out is designed around (the rayon fan-out
-    * analog, `src/core/executor.rs:11-37`). The pruned scan's SQL plan
-    * (pushdown + pruning) is unchanged — only the exchange that routes rows
-    * to kernel tasks becomes exact instead of hashed.
-    */
-  /** Batched-query fan-out: parallelism = segments × QUERY SHARDS. A merged
-    * index can have fewer segments than the cluster has cores — one task
-    * per segment would leave most of a 1000-executor cluster idle on a
-    * 2-segment index. Sharding the query batch restores the fan-out: each
-    * (segment, shard) task receives ONLY the posting rows its own shard's
-    * terms/ranges touch (plus the norms/delete rows every kernel needs), so
-    * the extra shuffle volume is bounded by cross-shard term overlap plus
-    * nShards copies of the per-segment norms. Results are bit-identical:
-    * every query still sees the complete postings for its own terms.
-    */
-  private def queryShardCount(nLive: Int): Int = {
-    val forced = spark.conf.getOption("spark.graft.queryShards")
-      .orElse(sys.env.get("GRAFT_QUERY_SHARDS")).map(_.toInt)
-    forced match {
-      case Some(n) => math.max(1, math.min(nLive, n))
-      case None =>
-        val nseg = math.max(manifest.segments.size, 1)
-        val cores = spark.sparkContext.defaultParallelism
-        val byCores = (cores + nseg - 1) / nseg
-        math.max(1, math.min(nLive, math.min(8, byCores)))
-    }
-  }
-
-  private def perSegmentShard[T: org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
-      rows: org.apache.spark.sql.Dataset[PostingRow],
-      live: Seq[(CQuery, Int)], nShards: Int)(
-      f: (Int, Int, Iterator[PostingRow]) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
-    val segIds = manifest.segmentIds.toArray
-    val ord = segIds.zipWithIndex.toMap
-    val nseg = math.max(segIds.length, 1)
-    // shard i-th live query to i % nShards; route rows by term/range/norms
-    val termToShards: Map[(String, String), Array[Int]] = live.zipWithIndex
-      .flatMap { case ((cq, _), i) => CQuery.termsOf(cq).map(_ -> (i % nShards)) }
-      .groupBy(_._1).map { case (t, ss) => t -> ss.map(_._2).distinct.toArray }
-    val rangesByShard: Array[Array[CQuery.CRange]] = {
-      val a = Array.fill(nShards)(Vector.empty[CQuery.CRange])
-      live.zipWithIndex.foreach { case ((cq, _), i) =>
-        val rs = CQuery.rangesOf(cq)
-        if (rs.nonEmpty) a(i % nShards) = a(i % nShards) ++ rs
-      }
-      a.map(_.toArray)
-    }
-    val delTerms = allDeleteTerms
-    val normsField = PostingRow.NormsField
-    val bRoute = spark.sparkContext.broadcast((termToShards, rangesByShard, delTerms))
-    val partitioner = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = nseg * nShards
-      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-    }
-    val keyed = rows.rdd.flatMap { r =>
-      val (t2s, rbs, del) = bRoute.value
-      val base = ord.getOrElse(r.segment, 0) * nShards
-      if (r.field == normsField || del.contains((r.field, r.term)))
-        (0 until nShards).iterator.map(s => (base + s, r))
-      else {
-        val direct = t2s.getOrElse((r.field, r.term), Array.emptyIntArray)
-        val viaRange = (0 until nShards).filter { s =>
-          !direct.contains(s) && rbs(s).exists { rg =>
-            rg.field == r.field &&
-              rg.lo.forall(v => if (rg.loInclusive) r.term >= v else r.term > v) &&
-              rg.hi.forall(v => if (rg.hiInclusive) r.term <= v else r.term < v)
-          }
-        }
-        (direct.iterator ++ viaRange.iterator).map(s => (base + s, r))
-      }
-    }
-    val shuffled = new org.apache.spark.rdd.ShuffledRDD[Int, PostingRow, PostingRow](
-      keyed, partitioner)
-    shuffled.setSerializer(new org.apache.spark.serializer.KryoSerializer(spark.sparkContext.getConf))
-    val rdd = shuffled.mapPartitionsWithIndex { (idx, it) =>
-      if (!it.hasNext) Iterator.empty
-      else f(segIds(idx / nShards), idx % nShards, it.map(_._2))
-    }
-    spark.createDataset(rdd)
-  }
-
-  private def perSegment[T: org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
-      rows: org.apache.spark.sql.Dataset[PostingRow])(
-      f: (Int, Iterator[PostingRow]) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
-    val ord = manifest.segmentIds.zipWithIndex.toMap
-    val nseg = math.max(ord.size, 1)
-    val partitioner = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = nseg
-      override def getPartition(key: Any): Int = ord.getOrElse(key.asInstanceOf[Int], 0)
-    }
-    // Kryo for this one exchange: the default RDD shuffle serializer (Java)
-    // measured 4-5x slower writing PostingRow's byte-array blobs
-    val shuffled = new org.apache.spark.rdd.ShuffledRDD[Int, PostingRow, PostingRow](
-      rows.rdd.map(r => (r.segment, r)), partitioner)
-    shuffled.setSerializer(new org.apache.spark.serializer.KryoSerializer(spark.sparkContext.getConf))
-    val rdd = shuffled
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val buf = it.buffered
-          val seg = buf.head._1
-          f(seg, buf.map(_._2))
-        }
-      }
-    spark.createDataset(rdd)
-  }
-
-  /** Pruned read of exactly the rows the kernels need: the query terms'
-    * posting rows plus each segment's norms row.
-    */
-  private def kernelRows(cq: CQuery) = {
-    val termCond = termsCond(CQuery.termsOf(cq) ++ allDeleteTerms)
-    val normsCond = col("field") === PostingRow.NormsField // all text fields' norms rows (tiny: one row per field per segment)
-    val base = termCond || normsCond
-    val cond = rangesCond(Seq(cq) ++ deleteCqsAll).map(base || _).getOrElse(base)
-    postingsDF.where(cond).as[PostingRow]
-  }
-
-  private def numDocsBySeg: Map[Int, Int] = manifest.segments.map(m => m.segment -> m.numDocs).toMap
 
   /** Top-k by BM25: per-segment WAND kernels + driver-side fruit merge. */
   def topDocs(q: Query, k: Int): Array[SearchHit] = topDocs(q, k, 0)
 
   /** Top-k with pagination — the reference's `TopDocs::and_offset`
-    * (`src/collector/top_score_collector.rs:155-173`): each segment collects
-    * (offset + k) candidates (a doc ranked k-th globally can be the
-    * (offset+k)-th of one segment), the global merge keeps (offset + k) and
-    * drops the first `offset`. Ranks number the PAGE (offset+1 ...).
+    * (`src/collector/top_score_collector.rs:155-173`).
     */
-  def topDocs(q: Query, k: Int, offset: Int): Array[SearchHit] = {
-    require(offset >= 0, "offset must be >= 0")
-    val cq = plan(q)
-    if (cq == CQuery.CEmpty) return Array.empty
-    val bcq = spark.sparkContext.broadcast(cq)
-    val bNumDocs = spark.sparkContext.broadcast(numDocsBySeg)
-    val bDel = bDeletes
-    val bDelQ = bDelQueries
-    val ptf = bPrimaryField
-    val kk = k + offset
-    val localTopK = perSegment(kernelRows(cq)) { (seg, it) =>
-        val ctx = Searcher.makeContext(it, bNumDocs.value, seg, bDel.value, ptf.value, bDelQ.value)
-        val topN = new TopNComputer(kk)
-        QueryKernel.topK(bcq.value, ctx, kk, topN, seg.toLong << 32)
-        topN.intoSortedVec().iterator.map { case (score, addr) =>
-          (seg, (addr & 0xffffffffL).toInt, score)
-        }
-      }.collect()
+  def topDocs(q: Query, k: Int, offset: Int): Array[SearchHit] = topK(Seq(q), k, offset).head
 
-    // merge fruits: pushes must arrive in ascending global address order
-    val merged = new TopNComputer(kk)
-    localTopK.sortBy(r => (r._1.toLong << 32) | r._2.toLong).foreach { case (seg, docId, score) =>
-      merged.push(score, (seg.toLong << 32) | docId.toLong)
-    }
-    val top = merged.intoSortedVec().drop(offset)
-    if (top.isEmpty) return Array.empty
+  /** Batched top-k: MANY queries in ONE kernel job — the bulk-scoring path
+    * (scoring a query log / training-pair generation). One shared stats
+    * aggregate, one pruned scan of the union of all query terms, one task
+    * per (segment, query shard), one collect, per-query driver merges, one
+    * doc-fetch join: per-query driver latency amortizes away.
+    */
+  def batchTopDocs(qs: Seq[Query], k: Int): Seq[Array[SearchHit]] = topK(qs, k, 0)
 
-    // fetch stored fields: broadcast the tiny top-k against the docmap
-    val addrs = top.zipWithIndex.map { case ((score, addr), rank) =>
-      ((addr >>> 32).toInt, (addr & 0xffffffffL).toInt, score, offset + rank + 1)
-    }
-    val addrDF = spark.createDataFrame(addrs.toSeq).toDF("segment", "docId", "score", "rank")
-    val segs = addrs.map(_._1).distinct.toSeq
-    val urls = docmapDF
-      .where(col("segment").isin(segs: _*))
-      .join(broadcast(addrDF), Seq("segment", "docId"))
-      .select("rank", "url", "score", "segment", "docId")
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getFloat(2), r.getInt(3), r.getInt(4)))
-      .sortBy(_._1)
-    urls.map { case (rank, url, score, seg, docId) => SearchHit(rank, url, score, seg, docId) }
+  /** Matching-doc count; single-term queries take the doc_freq fast path
+    * (`src/query/weight.rs:78-85`) off the memoized doc freqs, no kernel.
+    */
+  def count(q: Query): Long = q match {
+    case Query.Term(f, t, _) if manifest.deletes.isEmpty => docFreqs(Set(f -> t))(f -> t)
+    case _ => batchCount(Seq(q)).head
+  }
+
+  /** Many counts in ONE kernel job: each segment's task counts every query
+    * of its shard, the driver sums the tiny per-segment counts.
+    */
+  def batchCount(qs: Seq[Query]): Seq[Long] = {
+    val live = planAll(qs).zipWithIndex.filter(_._1 != CQuery.CEmpty)
+    val counts =
+      if (live.isEmpty) Map.empty[Int, Long]
+      else fanOut(live) { (_, ctx, _, mine) =>
+        mine.map { case (cq, qi) => (qi, QueryKernel.count(cq, ctx)) }
+      }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+    qs.indices.map(counts.getOrElse(_, 0L))
   }
 
   /** Stored-field fetch by doc address — the reference's `Searcher::doc`
@@ -648,8 +524,8 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * JSON agg tree evaluates over the query's matched doc set, bucket keys
     * and metric inputs reading docmap fast fields. Returns the nested ES
     * result JSON (`AggRequest.runJson`).
-    */
-  /** Filter sub-aggregations honor the reference's contract that their
+    *
+    * Filter sub-aggregations honor the reference's contract that their
     * `query_string` is an ENGINE query (`bucket/filter.rs:170-193`, parsed
     * with the index's own parser/analyzer): each filter bucket resolves to
     * the query's matched doc set and applies as a semi join on
@@ -676,18 +552,13 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     */
   def allMatches(q: Query, scored: Boolean = true): DataFrame = {
     val cq = plan(q)
-    val bcq = spark.sparkContext.broadcast(cq)
-    val bNumDocs = spark.sparkContext.broadcast(numDocsBySeg)
-    val bDel = bDeletes
-    val bDelQ = bDelQueries
-    val ptf = bPrimaryField
-    val sc = scored
     if (cq == CQuery.CEmpty)
       return Seq.empty[(Int, Int, Float)].toDF("segment", "docId", "score")
-    perSegment(kernelRows(cq)) { (seg, it) =>
-        val ctx = Searcher.makeContext(it, bNumDocs.value, seg, bDel.value, ptf.value, bDelQ.value)
-        QueryKernel.allMatches(bcq.value, ctx, sc).map { case (d, s) => (seg, d, s) }
-      }.toDF("segment", "docId", "score")
+    fanOut(Seq(cq -> 0)) { (seg, ctx, _, mine) =>
+      mine.flatMap { case (c, _) =>
+        QueryKernel.allMatches(c, ctx, scored).map { case (d, s) => (seg, d, s) }
+      }
+    }.toDF("segment", "docId", "score")
   }
 
   /** The reference's docs-and-positions iteration surface
@@ -701,22 +572,13 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * must be positions-indexed (analyzed TEXT/JSON — the reference's
     * `IndexRecordOption::WithFreqsAndPositions`).
     */
-  def termDocsAndPositions(field: String, term: String): DataFrame = {
-    val bNumDocs = spark.sparkContext.broadcast(numDocsBySeg)
-    val bDel = bDeletes
-    val bDelQ = bDelQueries
-    val ptf = bPrimaryField
-    val cq = plan(Query.Term(field, term))
-    val f0 = field
-    val t0 = term
-    perSegment(kernelRows(cq)) { (seg, it) =>
-      val ctx = Searcher.makeContext(it, bNumDocs.value, seg, bDel.value, ptf.value, bDelQ.value)
-      val p = ctx.fresh(f0, t0)
+  def termDocsAndPositions(field: String, term: String): DataFrame =
+    fanOut(Seq(plan(Query.Term(field, term)) -> 0)) { (seg, ctx, _, _) =>
+      val p = ctx.fresh(field, term)
       if (p == null) Iterator.empty
       else new Iterator[(Int, Int, Int, Array[Int])] {
         private def skipDead(): Unit =
-          while (p.doc != graft.codec.PostingsCodec.Terminated &&
-            java.util.Arrays.binarySearch(ctx.deleted, p.doc) >= 0) p.advance()
+          while (p.doc != graft.codec.PostingsCodec.Terminated && ctx.isDeleted(p.doc)) p.advance()
         skipDead()
         override def hasNext: Boolean = p.doc != graft.codec.PostingsCodec.Terminated
         override def next(): (Int, Int, Int, Array[Int]) = {
@@ -727,7 +589,6 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
         }
       }
     }.toDF("segment", "docId", "termFreq", "positions")
-  }
 
   /** `TopDocs::tweak_score` / `order_by_fast_field` analog
     * (`src/collector/top_score_collector.rs`): matched docs joined to the
@@ -736,7 +597,7 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * the orderBy+limit to TakeOrderedAndProject (per-partition heaps + one
     * tiny final merge — the distributed collector shape).
     */
-  def topDocsBy(q: Query, k: Int, sortCols: Seq[org.apache.spark.sql.Column]): DataFrame =
+  def topDocsBy(q: Query, k: Int, sortCols: Seq[Column]): DataFrame =
     allMatches(q, scored = true)
       .join(docmapDF, Seq("segment", "docId"))
       .orderBy(sortCols: _*)
@@ -751,9 +612,9 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   def explain(q0: Query, segment: Int, docId: Int): Option[Explanation] = {
     val cq = plan(q0)
     if (cq == CQuery.CEmpty) return None
-    val rows = kernelRows(cq).where(col("segment") === segment).collect()
-    val ctx = Searcher.makeContext(rows.iterator, numDocsBySeg, segment, deleteTermsBySeg, manifest.textField, deleteQueriesBySeg)
-    QueryKernel.explain(cq, ctx, docId)
+    val rows = postingsDF.where(col("segment") === segment && kernelCond(Seq(cq)))
+      .as[PostingRow].collect()
+    QueryKernel.explain(cq, Searcher.makeContext(rows.iterator, kernelState, segment), docId)
   }
 
   /** Explain by stored key (url): resolves the address via the docmap. */
@@ -771,16 +632,12 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     val affected = segments.filter(s =>
       deleteTermsBySeg.contains(s) || deleteQueriesBySeg.contains(s))
     if (affected.isEmpty) return Map.empty
-    val base = termsCond(allDeleteTerms) ||
-      col("field") === PostingRow.NormsField
-    val cond = rangesCond(deleteCqsAll).map(base || _).getOrElse(base)
-    val rows = postingsDF
-      .where(col("segment").isin(affected: _*) && cond)
+    val rows = postingsDF.where(col("segment").isin(affected: _*) && kernelCond(Nil))
       .as[PostingRow].collect()
       .groupBy(_.segment)
     affected.map { s =>
       s -> Searcher.makeContext(rows.getOrElse(s, Array.empty[PostingRow]).iterator,
-        numDocsBySeg, s, deleteTermsBySeg, manifest.textField, deleteQueriesBySeg).deleted
+        kernelState, s).deleted
     }.filter(_._2.nonEmpty).toMap
   }
 
@@ -796,27 +653,15 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     val cq = plan(q0)
     if (cq == CQuery.CEmpty) return Seq.empty[(String, Long)].toDF("facet", "count")
     val prefix = (if (root.endsWith("/")) root.dropRight(1) else root) + "/"
-    val bcq = spark.sparkContext.broadcast(cq)
-    val bNumDocs = spark.sparkContext.broadcast(numDocsBySeg)
-    val bDel = bDeletes
-    val bDelQ = bDelQueries
-    val ptf = bPrimaryField
-    val fld = field
-    val pfx = prefix
-    val facetCond = col("field") === field && col("term").startsWith(prefix)
-    val termCond = termsCond(CQuery.termsOf(cq) ++ allDeleteTerms)
-    val normsCond = col("field") === PostingRow.NormsField // all text fields' norms rows (tiny: one row per field per segment)
-    val base = termCond || normsCond || facetCond
-    val cond = rangesCond(Seq(cq) ++ deleteCqsAll).map(base || _).getOrElse(base)
-    perSegment(postingsDF.where(cond).as[PostingRow]) { (seg, it) =>
-        val rows = it.toArray
-        val ctx = Searcher.makeContext(rows.iterator, bNumDocs.value, seg, bDel.value, ptf.value, bDelQ.value)
+    fanOut(Seq(cq -> 0), Some(col("field") === field && col("term").startsWith(prefix))) {
+      (_, ctx, rows, mine) =>
         val matched = new java.util.BitSet(ctx.numDocs)
-        QueryKernel.allMatches(bcq.value, ctx, scored = false)
-          .foreach { case (d, _) => matched.set(d) }
+        mine.foreach { case (c, _) =>
+          QueryKernel.allMatches(c, ctx, scored = false).foreach { case (d, _) => matched.set(d) }
+        }
         rows.iterator
-          .filter(r => r.field == fld && r.term.startsWith(pfx) &&
-            r.term.indexOf('/', pfx.length) < 0)
+          .filter(r => r.field == field && r.term.startsWith(prefix) &&
+            r.term.indexOf('/', prefix.length) < 0)
           .map { r =>
             val (docs, _, _) = graft.codec.PostingsCodec
               .decodeAll(r.docFreq, r.postings, r.skip, readFreqs = true)
@@ -825,8 +670,7 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
             (r.term, c)
           }
           .filter(_._2 > 0)
-      }
-      .toDF("facet", "cnt")
+    }.toDF("facet", "cnt")
       .groupBy("facet").agg(sum("cnt").as("count"))
   }
 
@@ -837,35 +681,31 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     */
   def spaceUsage: graft.index.SpaceUsage.SearcherSpaceUsage =
     graft.index.SpaceUsage.of(spark, indexDir, manifest)
-
-  /** Matching-doc count; single-term queries take the doc_freq fast path
-    * (`src/query/weight.rs:78-85`) — a pruned metadata aggregate, no kernel.
-    */
-  def count(q: Query): Long = q match {
-    case Query.Term(f, t, _) if manifest.deletes.isEmpty =>
-      postingsDF.where(col("field") === f && col("term") === t)
-        .agg(sum("docFreq")).collect()(0) match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0)
-        }
-    case _ =>
-      val cq = plan(q)
-      if (cq == CQuery.CEmpty) return 0L
-      val bcq = spark.sparkContext.broadcast(cq)
-      val bNumDocs = spark.sparkContext.broadcast(numDocsBySeg)
-      val bDel = bDeletes
-    val bDelQ = bDelQueries
-    val ptf = bPrimaryField
-      perSegment(kernelRows(cq)) { (seg, it) =>
-          Iterator.single(
-            QueryKernel.count(bcq.value, Searcher.makeContext(it, bNumDocs.value, seg, bDel.value, ptf.value, bDelQ.value)))
-        }.collect().sum
-  }
 }
+
 
 final case class SearchHit(rank: Int, url: String, score: Float, segment: Int, docId: Int)
 
 object Searcher {
+
+  /** Session conf forcing the query-shard count of batched kernel jobs. */
+  private val QueryShardsKey = "spark.graft.queryShards"
+
+  /** Per-snapshot state of every kernel task: segment sizes, tombstones
+    * (terms and compiled delete queries, per segment) and the primary text
+    * field, whose norms serve fields without their own (json paths).
+    */
+  private[search] final case class KernelState(numDocsBySeg: Map[Int, Int],
+      deleteTermsBySeg: Map[Int, Seq[(String, String)]], primaryField: String,
+      deleteQueriesBySeg: Map[Int, Seq[CQuery]])
+
+  private def inBounds(term: String, lo: Option[String], hi: Option[String],
+      loInc: Boolean, hiInc: Boolean): Boolean =
+    lo.forall(v => if (loInc) term >= v else term > v) &&
+      hi.forall(v => if (hiInc) term <= v else term < v)
+
+  private def covers(rg: CQuery.CRange, r: PostingRow): Boolean =
+    rg.field == r.field && inBounds(r.term, rg.lo, rg.hi, rg.loInclusive, rg.hiInclusive)
 
   /** Time-travel reader: the index exactly as of commit `seq` (Iceberg-style
     * snapshot read over the `manifests/` log). Requires the snapshot to be
@@ -949,10 +789,7 @@ object Searcher {
   /** Executor-side: assemble one segment's kernel context from its posting
     * rows (static — keeps the Searcher instance out of task closures).
     */
-  def makeContext(rows: Iterator[PostingRow], numDocsBySeg: Map[Int, Int], seg: Int,
-      deleteTermsBySeg: Map[Int, Seq[(String, String)]] = Map.empty,
-      primaryField: String = "text",
-      deleteQueriesBySeg: Map[Int, Seq[CQuery]] = Map.empty)
+  private[search] def makeContext(rows: Iterator[PostingRow], state: KernelState, seg: Int)
       : QueryKernel.SegmentContext = {
     val byKey = new scala.collection.mutable.HashMap[(String, String), PostingRow]()
     val byField = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[PostingRow]]()
@@ -964,16 +801,16 @@ object Searcher {
     rows.foreach { r =>
       if (r.field == PostingRow.NormsField) {
         normsByField(r.term) = r.postings
-        if (norms == null || r.term == primaryField) norms = r.postings
+        if (norms == null || r.term == state.primaryField) norms = r.postings
       } else {
         byKey((r.field, r.term)) = r
         if (!r.field.startsWith("__"))
           byField.getOrElseUpdate(r.field, new scala.collection.mutable.ArrayBuffer[PostingRow]()) += r
       }
     }
-    val numDocs = numDocsBySeg.getOrElse(seg, if (norms != null) norms.length else 0)
+    val numDocs = state.numDocsBySeg.getOrElse(seg, if (norms != null) norms.length else 0)
     // dead-doc set from the tombstoned terms' own postings (sorted, deduped)
-    val deleted: Array[Int] = deleteTermsBySeg.get(seg) match {
+    val deleted: Array[Int] = state.deleteTermsBySeg.get(seg) match {
       case None => Array.emptyIntArray
       case Some(dts) =>
         val buf = new scala.collection.mutable.ArrayBuffer[Int]()
@@ -1014,10 +851,8 @@ object Searcher {
         Array[graft.codec.SegmentPostings] =
       (f, lo, hi, loInc, hiInc) => byField.get(f) match {
         case None => Array.empty[graft.codec.SegmentPostings]
-        case Some(rs) => rs.iterator.filter { r =>
-          lo.forall(v => if (loInc) r.term >= v else r.term > v) &&
-            hi.forall(v => if (hiInc) r.term <= v else r.term < v)
-        }.map(cursor).toArray
+        case Some(rs) =>
+          rs.iterator.filter(r => inBounds(r.term, lo, hi, loInc, hiInc)).map(cursor).toArray
       }
     val nbf = normsByField.toMap
     def build(dead: Array[Int]) =
@@ -1026,7 +861,7 @@ object Searcher {
     // segment's own postings (unscored scorer walk — the same lazy local
     // resolution as term tombstones, just with a richer matcher) and fold
     // the matches into the dead set
-    deleteQueriesBySeg.getOrElse(seg, Nil) match {
+    state.deleteQueriesBySeg.getOrElse(seg, Nil) match {
       case Nil => build(deleted)
       case qs =>
         val ctx0 = build(deleted)

@@ -112,7 +112,7 @@ object IndexCli {
       val s = new Searcher(spark, dir)
       val ts = s.expandTerms(field,
         org.apache.spark.sql.functions.col("term").startsWith(prefix), max = 50)
-      val dfs = s.docFreqsPublic(ts.map(t => (field, t)).toSet)
+      val dfs = s.docFreqs(ts.map(t => (field, t)).toSet)
       ts.foreach(t => println(f"${dfs.getOrElse((field, t), 0L)}%9d  $t"))
     case "stats" =>
       val s = new Searcher(spark, args(1))

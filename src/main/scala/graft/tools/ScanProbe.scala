@@ -49,7 +49,7 @@ object ScanProbe {
       postings.where(rowCond)
         .select(sum(crc32(col("postings"))), sum(crc32(col("skip")))).collect()(0).getLong(0)
     }
-    // the exact shape batchTopDocs executes before flatMapGroups: typed rows
+    // the exact shape the kernel fan-out reads before its exchange: typed rows
     timed("pruned typed collect->bytes") {
       import spark.implicits._
       postings.where(rowCond).as[graft.index.PostingRow]

@@ -137,6 +137,26 @@ class DeleteSpec extends AnyFunSuite {
       .isin(dead.toSeq: _*)).count() == 0)
   }
 
+  /** topDocs/count of each query == its slot of batchTopDocs/batchCount
+    * (urls and score bits), at 1 and 3 query shards; no hit is a dead doc.
+    */
+  private def assertSingleEqualsBatch(s: Searcher, qs: Seq[Query], dead: Set[String]): Unit = {
+    def bits(hs: Array[SearchHit]) =
+      hs.map(h => (h.url, java.lang.Float.floatToRawIntBits(h.score))).toList
+    for (n <- Seq(1, 3)) {
+      spark.conf.set("spark.graft.queryShards", n.toString)
+      try {
+        val batch = s.batchTopDocs(qs, 10)
+        val counts = s.batchCount(qs)
+        assert(batch.flatten.forall(h => !dead.contains(h.url)), s"dead doc hit at $n shards")
+        qs.zipWithIndex.foreach { case (q, i) =>
+          assert(bits(s.topDocs(q, 10)) == bits(batch(i)), s"$n shards, topDocs: $q")
+          assert(s.count(q) == counts(i), s"$n shards, count: $q")
+        }
+      } finally spark.conf.unset("spark.graft.queryShards")
+    }
+  }
+
   test("delete-by-query: lazy per-segment resolution, opstamp spares newer docs, merge purges") {
     import spark.implicits._
     val (dir, _) = freshIndex()
@@ -156,6 +176,11 @@ class DeleteSpec extends AnyFunSuite {
     val aliveUrls = s1.allMatches(Query.Term("text", "alpha"), scored = false)
       .join(s1.docmapDF, Seq("segment", "docId")).select("url").as[String].collect().toSet
     assert(aliveUrls.intersect(targets).isEmpty)
+    // a single query == a batch of one on the tombstoned index, with the
+    // batch unsharded and sharded
+    val parser = new QueryParser(s1.manifest.textField, analyzer = s1.manifest.textAnalyzer)
+    assertSingleEqualsBatch(s1, Seq("gamma", "alpha OR delta", "beta AND gamma", "alpha -gamma",
+      "\"alpha beta\"").map(parser.parse), targets)
     // survivors keep exact f32 scores (stats unchanged until merge)
     val beforeScores = s0.topDocs(Query.Term("text", "gamma"), 50)
       .map(h => h.url -> h.score).toMap
@@ -191,6 +216,20 @@ class DeleteSpec extends AnyFunSuite {
     val seqBefore = s3.manifest.commitSeq
     intercept[Exception] { Deleter.deleteQuery(spark, dir, "\"unclosed phrase") }
     assert(IndexManifest.read(spark, dir).get.commitSeq == seqBefore)
+  }
+
+  test("delete-by-query with a range clause: sharded batches see the whole dead set") {
+    val (dir, _) = freshIndex()
+    // `lang:*` compiles to a typed range: its rows reach kernels only through
+    // the tombstones' range predicate, never through a query term
+    Deleter.deleteQuery(spark, dir, "lang:* AND gamma")
+    val s = new Searcher(spark, dir)
+    val dead = corpus.collect { case (u, t) if t.contains("gamma") => u }.toSet
+    assert(dead.nonEmpty && dead.size < NumDocs)
+    assert(s.count(Query.All) == (NumDocs - dead.size).toLong)
+    val parser = new QueryParser(s.manifest.textField, analyzer = s.manifest.textAnalyzer)
+    assertSingleEqualsBatch(s, Seq("alpha", "gamma OR beta", "alpha AND beta", "delta",
+      "beta -alpha").map(parser.parse), dead)
   }
 
   test("delete-by-query fuzz: stacked random boolean tombstones == independent evaluator") {

@@ -26,6 +26,15 @@ class DriverContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without query: $orphans")
   }
 
+  test("Verify query selection: all, a named subset, or fail on unknown names") {
+    val known = Seq("q_a", "q_b", "q_c")
+    assert(Verify.selectQueries(None, known) == known)
+    assert(Verify.selectQueries(Some(" q_c, q_a "), known) == Seq("q_a", "q_c"))
+    val e = intercept[IllegalArgumentException](
+      Verify.selectQueries(Some("q_a,q_typo,q_zz"), known))
+    assert(e.getMessage.contains("q_typo") && e.getMessage.contains("q_zz"), e.getMessage)
+  }
+
   test("all queries execute at sf0.001") {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>

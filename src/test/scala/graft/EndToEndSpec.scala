@@ -268,6 +268,9 @@ class EndToEndSpec extends AnyFunSuite {
       assert(sharded == base, s"topDocs diverged at $n shards")
       assert(withShards(n)(searcher.batchCount(qs)) == baseCounts, s"counts diverged at $n shards")
     }
+    // a shard count below 1 is rejected, naming the conf key
+    val bad = intercept[IllegalArgumentException](withShards(0)(searcher.batchTopDocs(qs, 10)))
+    assert(bad.getMessage.contains("spark.graft.queryShards"), bad.getMessage)
   }
 
   test("build determinism: second build of same corpus is identical") {

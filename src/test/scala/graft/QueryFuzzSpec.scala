@@ -177,11 +177,15 @@ class QueryFuzzSpec extends AnyFunSuite {
   // GRAFT_FUZZ_TRIALS raises the count for one-off deep soaks (default 80)
   private val trials = sys.env.get("GRAFT_FUZZ_TRIALS").map(_.toInt).getOrElse(80)
 
+  private lazy val trees: Seq[Query] = {
+    val rnd = new scala.util.Random(20260818L)
+    (0 until trials).map(_ => gen(rnd, 2 + rnd.nextInt(2)))
+  }
+
   test("80 random query trees: engine match set == independent text-level evaluator") {
     import spark.implicits._
     val s = new Searcher(spark, indexDir)
-    val rnd = new scala.util.Random(20260818L)
-    val queries = (0 until trials).map(_ => gen(rnd, 2 + rnd.nextInt(2)))
+    val queries = trees
     var nonEmpty = 0
     queries.zipWithIndex.foreach { case (q, qi) =>
       val got = s.allMatches(q, scored = false)
@@ -198,6 +202,18 @@ class QueryFuzzSpec extends AnyFunSuite {
     val counts = s.batchCount(queries.take(20))
     queries.take(20).zip(counts).foreach { case (q, c) =>
       assert(c == model.values.count(matches(q, _)), q)
+    }
+  }
+
+  test("random query trees: a single query == a batch of one (hits, score bits, counts)") {
+    val s = new Searcher(spark, indexDir)
+    val batch = s.batchTopDocs(trees, 10)
+    val counts = s.batchCount(trees)
+    def bits(hs: Array[SearchHit]) =
+      hs.map(h => (h.url, java.lang.Float.floatToRawIntBits(h.score))).toList
+    trees.zipWithIndex.foreach { case (q, i) =>
+      assert(bits(s.topDocs(q, 10)) == bits(batch(i)), s"query #$i topDocs: $q")
+      assert(s.count(q) == counts(i), s"query #$i count: $q")
     }
   }
 }
