@@ -324,15 +324,15 @@ object QueryKernel {
   /** Wide disjunctions switch to the horizon-window union (buffered_union.rs
     * picks the buffered scorer whenever there are >1 legs; we keep the
     * zero-setup linear scan for narrow unions where the window refill
-    * overhead dominates). Measured (tools/UnionProbe, 1M docs, OR-8): the
-    * buffered kernel wins on DENSE self-driven unions (~1.0-1.5x) and on
+    * overhead dominates). Measured (1M docs, OR-8; BENCH.md "Union
+    * seek-density gate"): the buffered kernel wins on DENSE self-driven
+    * unions (~1.0-1.5x) and on
     * SPARSE rare-term self-driven unions too (~1.15x — empty windows skip
     * to the next live doc instead of refilling), so no density gate is
     * needed on the self-driven path; only seek-driven unions (below) want
     * the drive-ratio gate.
     */
-  private val WideUnionThreshold =
-    sys.env.get("GRAFT_WIDE_UNION").map(_.toInt).getOrElse(4)
+  private val WideUnionThreshold = 4
 
   /** Seek-density gate: a union nested under an intersection (or feeding an
     * Exclude) is advanced by an outer driver; each far seek costs the
@@ -343,10 +343,10 @@ object QueryKernel {
     * windows only when the driver covers >= 1/ratio of the union's summed
     * cost (self-driven unions pass drivenBy = Long.MaxValue and always
     * qualify). The reference always buffers (buffered_union.rs picks it for
-    * >1 legs); this gate is measured, not inherited (tools/UnionProbe).
+    * >1 legs); this gate is measured, not inherited (BENCH.md "Union
+    * seek-density gate": 3.4x on seek-driven shapes).
     */
-  private val UnionDriveRatio =
-    sys.env.get("GRAFT_UNION_DRIVE_RATIO").map(_.toLong).getOrElse(4L)
+  private val UnionDriveRatio = 4L
 
   private[search] def union(legs: Seq[Scorer], msm: Int, scored: Boolean,
       drivenBy: Long = Long.MaxValue): Scorer = {

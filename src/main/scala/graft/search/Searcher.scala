@@ -1,34 +1,36 @@
 package graft.search
 
-import scala.reflect.ClassTag
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.serializer.KryoSerializer
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{IndexManifest, PostingRow, Snapshots}
+import graft.index.{IndexManifest, PostingRow, SegmentFiles, Snapshots}
+import graft.index.SegmentFiles.{AllOf, Clause, Terms}
 
 /** Point-in-time searcher over an index directory — the reference's
   * `Searcher` (`/root/reference/src/core/searcher.rs:69`): the manifest is
   * the snapshot. Every kernel-running call takes ONE path, the reference's
   * `search_with_executor` (`searcher.rs:220-236`, SURVEY.md §3.2); a single
-  * `topDocs` / `count` is a batch of one:
+  * `topDocs` / `count` is a batch of one, and runs as one Spark job of one
+  * stage:
   *
-  *   1. driver: dictionary expansion (fuzzy/regex/range/set) + global stats
-  *      (doc freqs via one pruned aggregate per batch, memoized; N,
-  *      totalTokens from the manifest) -> BM25 weights -> broadcast
-  *      compiled queries;
-  *   2. executors ([[fanOut]]): one pruned scan of the batch's rows, routed
-  *      by an exact partitioner to one task per (segment, query shard);
-  *      each task runs its queries' scorer DAG + WAND top-k
-  *      (`collect_segment`; the rayon fan-out, `src/core/executor.rs:11-37`);
+  *   1. driver, no Spark job: dictionary expansion (fuzzy/regex/range/set)
+  *      and global doc freqs in ONE filtered read of every segment file's
+  *      (field, term, docFreq) columns per batch ([[TermDictionary]] over
+  *      [[SegmentFiles]]; doc freqs memoized; N, totalTokens from the
+  *      manifest) -> BM25 weights -> compiled queries;
+  *   2. executors ([[fanOut]]): one task per (segment, query shard) reads
+  *      its own segment's files, pruned to its queries' terms and ranges,
+  *      runs their scorer DAG + WAND top-k (`collect_segment`; the rayon
+  *      fan-out, `src/core/executor.rs:11-37`) and resolves its top docs'
+  *      urls from the segment's `__doc__` rows (the store reader);
   *   3. driver: TopNComputer merge of each query's per-segment fruits
-  *      (`merge_fruits`, O(segments × k) per query), then one broadcast
-  *      join back to the docmap for stored fields.
+  *      (`merge_fruits`, O(segments × k) per query).
   *
-  * Everything reaching Parquet is pruned: only query terms' rows (plus the
-  * one norms row per segment) are ever read — filter pushdown on the sorted
-  * `term` column is the FST lookup analog.
+  * Every read is pruned: only query terms' rows (plus the one norms row per
+  * text field and segment) are ever read — the filter on the sorted `term`
+  * column is the FST lookup analog. The segment listing and footers are
+  * read lazily, at the first query, never by the constructor.
   */
 final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long] = None)
     extends Serializable {
@@ -41,26 +43,41 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   }
 
   import spark.implicits._
+  import TermDictionary.{Walk, walkOf}
 
-  // lazy vals: the Parquet FileIndex (file listing + schema) is resolved once
-  // per Searcher snapshot and reused by every query — re-listing per query
-  // costs a driver job once the segment count crosses the parallel-discovery
-  // threshold.
-  // The scan is pinned to THIS manifest's segment set (a partition filter on
-  // the `segment` directory column): with snapshot retention, the postings
-  // dir can hold segments from other snapshots (pre-merge inputs kept by
-  // `merge(keepOld = true)`, or newer commits) that must stay invisible here.
-  private lazy val postingsDF: DataFrame = spark.read.parquet(s"$indexDir/postings")
-    .where(col("segment").isin(manifest.segmentIds: _*))
-  /** Doc-map view over the same segment table (field == __doc__ rows).
-    * Fast fields declared at build time (`IndexConfig.fast*Fields`) flatten
-    * from the typed map columns into named columns — the reference's
-    * fast-field reader surface (`src/fastfield/mod.rs`): sort / filter /
-    * aggregate over matches without touching postings or the source table.
+  private def hadoopConf: Configuration = spark.sparkContext.hadoopConfiguration
+
+  /** This snapshot's segment files — only the manifest's segments, so files
+    * of other snapshots (pre-merge inputs kept by `merge(keepOld = true)`,
+    * newer commits) stay invisible here. Listed once per Searcher.
+    */
+  private lazy val segmentFiles: Seq[SegmentFiles] =
+    SegmentFiles.list(hadoopConf, indexDir, manifest.segmentIds)
+  private lazy val filesBySeg: Map[Int, SegmentFiles] = segmentFiles.map(f => f.segment -> f).toMap
+  private lazy val bConf = spark.sparkContext.broadcast(new SerializableWritable(hadoopConf))
+
+  /** Driver-side read of `segs`' rows matching `clauses`, the segments in
+    * parallel; `f` sees one row at a time, in no fixed order.
+    */
+  private def readRows(segs: Seq[SegmentFiles], columns: Seq[String], clauses: Seq[Clause])(
+      f: PostingRow => Unit): Unit = {
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    val conf = hadoopConf
+    val lock = new Object
+    segs.map(seg => Future(seg.read(conf, columns, clauses)(r => lock.synchronized(f(r))))(
+      ExecutionContext.global)).foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+  }
+
+  /** Doc-map view over the segment table (field == __doc__ rows), pinned to
+    * this manifest's segments. Fast fields declared at build time
+    * (`IndexConfig.fast*Fields`) flatten from the typed map columns into
+    * named columns — the reference's fast-field reader surface
+    * (`src/fastfield/mod.rs`): sort / filter / aggregate over matches
+    * without touching postings or the source table.
     */
   lazy val docmapDF: DataFrame = {
-    val base = postingsDF
-      .where(col("field") === PostingRow.DocField)
+    val base = spark.read.parquet(s"$indexDir/postings")
+      .where(col("segment").isin(manifest.segmentIds: _*) && col("field") === PostingRow.DocField)
     val withFf = manifest.fastFields.foldLeft(base) { (df, ff) =>
       val m = ff.ftype match {
         case "long"    => "ffLongs"
@@ -77,8 +94,8 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   }
 
   /** Tombstoned (field, term) pairs applicable per segment (opstamp rule);
-    * their postings ride along in every pruned kernel read so executors can
-    * assemble the dead-doc set without an extra job.
+    * their postings ride along in every kernel read so tasks can assemble
+    * the dead-doc set without an extra job.
     */
   private val deleteTermsBySeg: Map[Int, Seq[(String, String)]] =
     manifest.segments
@@ -122,81 +139,43 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     deleteTermsBySeg, manifest.textField, deleteQueriesBySeg)
   private lazy val bKernelState = spark.sparkContext.broadcast(kernelState)
 
+  private val dictionary = new TermDictionary(clauses => f =>
+    readRows(segmentFiles, SegmentFiles.DictColumns, clauses)(f))
+
   /** Per-text-field token totals (the BM25 average-field-length statistic,
     * `Bm25Weight::for_terms` avg_fieldnorm): summed from each field's norms
-    * rows in one tiny pruned aggregate, memoized per snapshot. Only
-    * consulted for non-primary fields, so single-text-field workloads never
-    * pay the job.
+    * rows, memoized per snapshot. Only consulted for non-primary fields.
     */
-  private lazy val fieldTokenTotals: Map[String, Long] =
-    postingsDF.where(col("field") === PostingRow.NormsField)
-      .groupBy("term").agg(sum("totalTf"))
-      .as[(String, Long)].collect().toMap
-
-  /** OR-condition matching a set of (field, term) pairs. */
-  private def termsCond(terms: Set[(String, String)]): Column =
-    if (terms.isEmpty) lit(false)
-    else terms.groupBy(_._1).map { case (f, ts) =>
-      col("field") === f && col("term").isin(ts.map(_._2).toSeq: _*)
-    }.reduce(_ || _)
-
-  /** OR-condition matching the typed-range predicates of compiled queries —
-    * rides the same pruned scan (the sorted `term` column makes these
-    * row-group range prunes, the dictionary-range analog of the FST walk).
-    */
-  private def rangesCond(cqs: Iterable[CQuery]): Option[Column] = {
-    val rs = cqs.flatMap(CQuery.rangesOf).toSeq.distinct
-    if (rs.isEmpty) None
-    else Some(rs.map { r =>
-      val preds = Seq(Some(col("field") === r.field),
-        r.lo.map(v => if (r.loInclusive) col("term") >= v else col("term") > v),
-        r.hi.map(v => if (r.hiInclusive) col("term") <= v else col("term") < v)).flatten
-      preds.reduce(_ && _)
-    }.reduce(_ || _))
+  private lazy val fieldTokenTotals: Map[String, Long] = {
+    val tot = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    readRows(segmentFiles, SegmentFiles.DictColumns, Seq(AllOf(PostingRow.NormsField)))(r =>
+      tot(r.term) += r.totalTf)
+    tot.toMap
   }
 
-  /** The pruned read of a kernel task: the compiled queries' terms and
-    * typed ranges, every tombstone's own term and range rows (tasks
-    * assemble the dead-doc set from them), the norms rows (one per text
-    * field per segment) and `extra`.
+  /** The rows a kernel task reads: the compiled queries' terms and typed
+    * ranges, every tombstone's own term and range rows (tasks assemble the
+    * dead-doc set from them), the norms rows (one per text field per
+    * segment) and `extra`.
     */
-  private def kernelCond(cqs: Seq[CQuery], extra: Option[Column] = None): Column =
-    (Seq(termsCond(cqs.flatMap(CQuery.termsOf).toSet ++ allDeleteTerms),
-      col("field") === PostingRow.NormsField) ++ extra ++ rangesCond(cqs ++ deleteCqsAll))
-      .reduce(_ || _)
+  private def kernelClauses(cqs: Seq[CQuery], extra: Seq[Clause] = Nil): Seq[Clause] =
+    (cqs.flatMap(CQuery.termsOf).toSet ++ allDeleteTerms).groupMap(_._1)(_._2)
+      .map { case (f, ts) => Terms(f, ts) }.toSeq ++
+      Seq(AllOf(PostingRow.NormsField)) ++ extra ++
+      (cqs ++ deleteCqsAll).flatMap(CQuery.rangesOf).distinct
+        .map(r => SegmentFiles.Range(r.field, r.lo, r.hi, r.loInclusive, r.hiInclusive))
 
   // ------------------------------------------------------------- planning
 
-  /** Resolve term-expansion queries against the term dictionary (the
+  /** Resolve term-expansion queries against the walked dictionary (the
     * automaton-walk stage) and drop unknown terms.
     */
-  private def expand(q: Query): Query = q match {
-    case Query.Fuzzy(f, t, d, prefix, transp) =>
-      // transposition-cost-one = restricted-Damerau (OSA), the reference's
-      // Levenshtein-DFA option. OSA has no SQL builtin, but lev <= 2*osa
-      // (a transposition is two plain edits), so the pushed-down dictionary
-      // pre-filter `levenshtein <= 2d` is a superset; exact OSA filters the
-      // (tiny) candidate list driver-side.
-      val maxLev = if (transp) 2 * d else d
-      val levPred = expr(s"levenshtein(term, ${sqlLit(t)}) <= $maxLev")
-      val pred = if (prefix) col("term").startsWith(t) || levPred else levPred
-      var terms = expandTerms(f, pred)
-      if (transp)
-        terms = terms.filter(x => (prefix && x.startsWith(t)) || Searcher.osaDistance(x, t) <= d)
-      constSet(f, terms)
-    case Query.Regexp(f, p) =>
-      constSet(f, expandTerms(f, regexPred(p)))
-    case Query.TermRange(f, lo, hi, loInc, hiInc) =>
-      val preds = Seq(
-        lo.map(v => if (loInc) col("term") >= v else col("term") > v),
-        hi.map(v => if (hiInc) col("term") <= v else col("term") < v)).flatten
-      val pred = if (preds.isEmpty) lit(true) else preds.reduce(_ && _)
-      constSet(f, expandTerms(f, pred))
-    case Query.Prefix(f, p, max) =>
-      constSet(f, expandTerms(f, col("term").startsWith(p), max))
+  private def expand(q: Query, walked: Map[Walk, Seq[String]]): Query = q match {
+    case _: Query.Fuzzy | _: Query.Regexp | _: Query.TermRange | _: Query.Prefix =>
+      constSet(walkOf(q).field, leafTerms(q, walked))
     case Query.TermSet(f, ts) => constSet(f, ts.distinct)
     case Query.PhrasePrefix(f, ts, max) =>
-      val expansions = expandTerms(f, col("term").startsWith(ts.last), max)
+      val expansions = walked(Walk(Query.Prefix(f, ts.last), max))
       if (expansions.isEmpty) Query.Nothing
       else Query.Bool(expansions.map(e => Occur.Should -> Query.Phrase(f, ts.init :+ e)))
     case Query.RegexPhrase(f, pats, slop, max) =>
@@ -205,7 +184,7 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
       // is across all slots, as in the reference (:81-86).
       var budget = max
       val slots = pats.map { p =>
-        val terms = expandTerms(f, regexPred(p), budget + 1)
+        val terms = walked(Walk(Query.Regexp(f, p), max + 1)).take(budget + 1)
         if (terms.size > budget)
           throw new IllegalArgumentException(s"regex phrase exceeded max expansions $max")
         budget -= terms.size
@@ -213,24 +192,35 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
       }
       if (slots.exists(_.isEmpty)) Query.Nothing
       else Query.MultiPhrase(f, slots, pats, slop)
-    case Query.Bool(cs, msm) => Query.Bool(cs.map { case (o, c) => (o, expand(c)) }, msm)
-    case Query.Boost(i, b) => Query.Boost(expand(i), b)
-    case Query.ConstScore(i, s) => Query.ConstScore(expand(i), s)
-    case Query.DisjunctionMax(ds, t) => Query.DisjunctionMax(ds.map(expand), t)
+    case Query.Bool(cs, msm) => Query.Bool(cs.map { case (o, c) => (o, expand(c, walked)) }, msm)
+    case Query.Boost(i, b) => Query.Boost(expand(i, walked), b)
+    case Query.ConstScore(i, s) => Query.ConstScore(expand(i, walked), s)
+    case Query.DisjunctionMax(ds, t) => Query.DisjunctionMax(ds.map(expand(_, walked)), t)
     case other => other
   }
 
-  private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** Anchored regex dictionary predicate, with the pattern's literal prefix
-    * pushed down as `startsWith` so the sorted term column's row-group stats
-    * prune the walk (the reference's automaton-prefix FST seek,
-    * `automaton_weight.rs:37-55`).
+  /** The terms a leaf expansion query resolves to. Fuzzy matching with
+    * transpositions is restricted-Damerau (OSA), the reference's
+    * Levenshtein-DFA option; its walk uses the superset `levenshtein <= 2d`
+    * (a transposition is two plain edits) and exact OSA filters the capped
+    * candidate list.
     */
-  private def regexPred(p: String): Column = {
-    val pred = col("term").rlike(s"^(?:$p)$$")
-    val pre = Searcher.literalPrefix(p)
-    if (pre.isEmpty) pred else col("term").startsWith(pre) && pred
+  private def leafTerms(q: Query, walked: Map[Walk, Seq[String]]): Seq[String] = q match {
+    case Query.Fuzzy(_, t, d, prefix, true) =>
+      walked(walkOf(q)).filter(x => (prefix && x.startsWith(t)) || Searcher.osaDistance(x, t) <= d)
+    case _ => walked(walkOf(q))
+  }
+
+  /** The dictionary walks `q` needs before it can be planned. */
+  private def walksOf(q: Query): Seq[Walk] = q match {
+    case _: Query.Fuzzy | _: Query.Regexp | _: Query.TermRange | _: Query.Prefix => Seq(walkOf(q))
+    case Query.PhrasePrefix(f, ts, max) => Seq(Walk(Query.Prefix(f, ts.last), max))
+    case Query.RegexPhrase(f, pats, _, max) => pats.map(p => Walk(Query.Regexp(f, p), max + 1))
+    case Query.Bool(cs, _) => cs.flatMap(c => walksOf(c._2))
+    case Query.Boost(i, _) => walksOf(i)
+    case Query.ConstScore(i, _) => walksOf(i)
+    case Query.DisjunctionMax(ds, _) => ds.flatMap(walksOf)
+    case _ => Nil
   }
 
   private def constSet(field: String, terms: Seq[String]): Query =
@@ -238,48 +228,34 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     else Query.ConstScore(
       Query.Bool(terms.map(t => Occur.Should -> Query.Term(field, t))), 1.0f)
 
-  /** Dictionary scan: distinct terms of `field` matching `pred` (capped).
-    * Reads only the (field, term) columns — Parquet column pruning.
+  /** The dictionary terms an expanding query (Prefix, Regexp, Fuzzy,
+    * TermRange) resolves to — distinct, in UTF-8 order, capped as the query
+    * caps them — with their global doc freqs memoized for [[docFreqs]].
     */
-  def expandTerms(field: String, pred: Column, max: Int = 1024): Seq[String] =
-    postingsDF
-      .where(col("field") === field && !col("field").startsWith("__") && pred)
-      .select("term").distinct().orderBy("term").limit(max)
-      .as[String].collect().toSeq
-
-  // memoized per-snapshot: the manifest is immutable, so a term's global df
-  // never changes for this Searcher — repeat batches over warm terms skip
-  // the stats job entirely
-  private val dfCache = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-
-  /** Global doc freqs for a set of terms: one pruned scan + tiny aggregate
-    * for the terms not yet memoized (`Searcher::doc_freq`, searcher.rs:133,
-    * summed across segments).
-    */
-  def docFreqs(terms: Set[(String, String)]): Map[(String, String), Long] = {
-    if (terms.isEmpty) return Map.empty[(String, String), Long].withDefaultValue(0L)
-    val missing = terms.filterNot(dfCache.contains)
-    if (missing.nonEmpty) {
-      val fields = missing.map(_._1).toSeq
-      val termList = missing.map(_._2).toSeq
-      val found = postingsDF
-        .where(col("field").isin(fields: _*) && col("term").isin(termList: _*))
-        .groupBy("field", "term").agg(sum("docFreq").as("df"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .toMap
-      missing.foreach(t => dfCache(t) = found.getOrElse(t, 0L))
-    }
-    terms.iterator.map(t => t -> dfCache(t)).toMap.withDefaultValue(0L)
+  def dictionaryTerms(q: Query): Seq[String] = q match {
+    case _: Query.Fuzzy | _: Query.Regexp | _: Query.TermRange | _: Query.Prefix =>
+      leafTerms(q, dictionary.walk(Set.empty, walksOf(q)))
+    case other => throw new IllegalArgumentException(s"not a dictionary walk: $other")
   }
+
+  /** Global doc freqs for a set of terms (`Searcher::doc_freq`,
+    * searcher.rs:133, summed across segments), memoized per snapshot: one
+    * driver-side dictionary read for the terms not yet seen.
+    */
+  def docFreqs(terms: Set[(String, String)]): Map[(String, String), Long] =
+    dictionary.docFreqs(terms)
 
   private def collectTerms(q: Query): Set[(String, String)] = q match {
     case Query.Term(f, t, _) => Set(f -> t)
     case Query.Phrase(f, ts, _) => ts.map(f -> _).toSet
     case Query.MultiPhrase(f, slots, pats, _) =>
-      // slot terms feed the kernels' pruned scan; the literal patterns feed
-      // the BM25 weight stats (regex_phrase_query.rs:145-149)
+      // slot terms feed the kernels' reads; the literal patterns feed the
+      // BM25 weight stats (regex_phrase_query.rs:145-149)
       (slots.flatten ++ pats).map(f -> _).toSet
+    // before expansion: the literal terms an expanding query will need
+    case Query.TermSet(f, ts) => ts.map(f -> _).toSet
+    case Query.PhrasePrefix(f, ts, _) => ts.init.map(f -> _).toSet
+    case Query.RegexPhrase(f, pats, _, _) => pats.map(f -> _).toSet
     case Query.Bool(cs, _) => cs.flatMap(c => collectTerms(c._2)).toSet
     case Query.Boost(i, _) => collectTerms(i)
     case Query.ConstScore(i, _) => collectTerms(i)
@@ -287,13 +263,14 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     case _ => Set.empty
   }
 
-  /** Plan many queries with ONE stats job (shared doc-freq aggregate);
-    * duplicate queries plan once and share the compiled object graph (the
-    * broadcast then serializes each distinct weight once).
+  /** Plan many queries off ONE dictionary read (every expansion and every
+    * literal term's doc freq); duplicate queries plan once and share the
+    * compiled object graph.
     */
   def planAll(qs: Seq[Query]): Seq[CQuery] = {
     val uniq = qs.distinct
-    val expanded = uniq.map(expand)
+    val walked = dictionary.walk(uniq.flatMap(collectTerms).toSet, uniq.flatMap(walksOf))
+    val expanded = uniq.map(expand(_, walked))
     val dfs = docFreqs(expanded.flatMap(collectTerms).toSet)
     val compiled = uniq.zip(expanded.map(q => planWith(q, dfs))).toMap
     qs.map(compiled)
@@ -361,117 +338,78 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     math.max(1, math.min(nQueries, n))
   }
 
-  /** The one executor fan-out behind every kernel-running call: a pruned
-    * read of [[kernelCond]], routed by an exact partitioner to one task per
-    * (segment, query shard), where `kernel(segment, ctx, rows, queries)`
-    * runs over the segment's context, its raw rows and the (query, tag)
-    * pairs of the task's shard (the i-th query belongs to shard
-    * i % nShards).
+  /** The one executor fan-out behind every kernel-running call: one task
+    * per (segment, query shard) — a Dataset of `nParts` single-element
+    * partitions, no exchange — where the i-th query belongs to shard
+    * i % nShards. Each task reads its own segment's files, pruned to
+    * [[kernelClauses]] of ITS shard's queries plus `extra`, and runs
+    * `kernel(task, queries)` over the segment's context and rows.
     *
-    * The partitioner keys on the manifest's segment ordinal: Spark's hashed
-    * exchange puts n keys into n buckets with collisions (measured on a
-    * 32-segment index, one task carried 3 segments, 3.2 s, while others
-    * idled at a 1.1 s median). Each (segment, shard) task receives only the
-    * rows its own queries' terms/ranges touch, plus the norms and tombstone
-    * rows every kernel needs, so sharding adds only cross-shard term overlap
-    * and nShards copies of those shared rows to the exchange. Results are
-    * bit-identical at any shard count: every query sees the complete
-    * postings of its own terms.
+    * A shard is the same segment files, a subset of the queries: sharding
+    * costs only the rows shared across shards (norms, tombstones, common
+    * terms) read once per shard. Results are bit-identical at any shard
+    * count: every query sees the complete postings of its own terms.
     */
-  private def fanOut[T: Encoder : ClassTag](queries: Seq[(CQuery, Int)],
-      extra: Option[Column] = None)(
-      kernel: (Int, QueryKernel.SegmentContext, Array[PostingRow], Iterator[(CQuery, Int)]) =>
-        Iterator[T]): Dataset[T] = {
-    val cqs = queries.map(_._1)
-    val nShards = queryShardCount(cqs.size)
-    val segIds = manifest.segmentIds.toArray
-    val ord = segIds.zipWithIndex.toMap
-    val rows = postingsDF.where(kernelCond(cqs, extra)).as[PostingRow].rdd
-    val keyed: RDD[(Int, PostingRow)] =
-      if (nShards == 1) rows.map(r => (ord.getOrElse(r.segment, 0), r))
-      else {
-        val termShards = cqs.zipWithIndex
-          .flatMap { case (cq, i) => CQuery.termsOf(cq).map(_ -> i % nShards) }
-          .groupBy(_._1).map { case (t, ss) => t -> ss.map(_._2).distinct.toArray }
-        val shardRanges = Array.tabulate(nShards)(s =>
-          cqs.indices.filter(_ % nShards == s).flatMap(i => CQuery.rangesOf(cqs(i))).toArray)
-        val bRoute = spark.sparkContext.broadcast(
-          (termShards, shardRanges, allDeleteTerms, deleteCqsAll.flatMap(CQuery.rangesOf).toArray))
-        rows.flatMap { r =>
-          val (t2s, ranges, delTerms, delRanges) = bRoute.value
-          val base = ord.getOrElse(r.segment, 0) * nShards
-          val shards =
-            if (r.field == PostingRow.NormsField || delTerms.contains((r.field, r.term)) ||
-                delRanges.exists(Searcher.covers(_, r))) Iterator.range(0, nShards)
-            else {
-              val direct = t2s.getOrElse((r.field, r.term), Array.emptyIntArray)
-              direct.iterator ++ Iterator.range(0, nShards).filter(s =>
-                !direct.contains(s) && ranges(s).exists(Searcher.covers(_, r)))
-            }
-          shards.map(s => (base + s, r))
-        }
-      }
-    val nParts = math.max(segIds.length, 1) * nShards
-    val shuffled = new ShuffledRDD[Int, PostingRow, PostingRow](keyed, new Partitioner {
-      override def numPartitions: Int = nParts
-      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-    })
-    // Kryo for this one exchange: the default RDD shuffle serializer (Java)
-    // measured 4-5x slower writing PostingRow's byte-array blobs
-    shuffled.setSerializer(new KryoSerializer(spark.sparkContext.getConf))
+  private def fanOut[T: Encoder](queries: Seq[(CQuery, Int)], extra: Seq[Clause] = Nil)(
+      kernel: (Searcher.SegmentTask, Iterator[(CQuery, Int)]) => Iterator[T]): Dataset[T] = {
+    val nShards = queryShardCount(queries.size)
+    val shardClauses = Array.tabulate(nShards)(s =>
+      kernelClauses(queries.indices.filter(_ % nShards == s).map(i => queries(i)._1), extra))
+    val segs = segmentFiles.toArray
     val bState = bKernelState
-    val bQueries = spark.sparkContext.broadcast(queries)
-    spark.createDataset(shuffled.mapPartitionsWithIndex { (p, it) =>
-      if (!it.hasNext) Iterator.empty
+    val conf = bConf
+    val nParts = math.max(segs.length, 1) * nShards
+    spark.range(0, nParts, 1, nParts).as[Long].mapPartitions(_.flatMap { p =>
+      val (si, shard) = ((p / nShards).toInt, (p % nShards).toInt)
+      if (si >= segs.length) Iterator.empty
       else {
-        val seg = segIds(p / nShards)
-        val segRows = it.map(_._2).toArray
-        val mine = bQueries.value.iterator.zipWithIndex
-          .collect { case (q, i) if i % nShards == p % nShards => q }
-        kernel(seg, Searcher.makeContext(segRows.iterator, bState.value, seg), segRows, mine)
+        val files = segs(si)
+        val rows = files.rows(conf.value.value, SegmentFiles.KernelColumns, shardClauses(shard))
+        if (rows.isEmpty) Iterator.empty
+        else {
+          val ctx = Searcher.makeContext(rows.iterator, bState.value, files.segment)
+          val mine = queries.iterator.zipWithIndex.collect { case (q, i) if i % nShards == shard => q }
+          kernel(Searcher.SegmentTask(files, conf.value.value, ctx, rows), mine)
+        }
       }
     })
   }
 
   /** Top-k for a batch: each segment's task collects every query's
     * top-(offset + k) fruits (a doc ranked k-th globally can be the
-    * (offset + k)-th of one segment), the driver merges each query's fruits
-    * and drops the first `offset`, and one doc-fetch join serves every
-    * query's page. Ranks number the page (offset + 1 ...).
+    * (offset + k)-th of one segment) with their urls, and the driver merges
+    * each query's fruits and drops the first `offset`. Ranks number the
+    * page (offset + 1 ...).
     */
   private def topK(qs: Seq[Query], k: Int, offset: Int): Seq[Array[SearchHit]] = {
     require(offset >= 0, "offset must be >= 0")
     val live = planAll(qs).zipWithIndex.filter(_._1 != CQuery.CEmpty)
     val kk = k + offset
     val fruits =
-      if (live.isEmpty) Array.empty[(Int, Long, Float)]
-      else fanOut(live) { (seg, ctx, _, mine) =>
-        mine.flatMap { case (cq, qi) =>
+      if (live.isEmpty) Array.empty[(Int, Long, Float, String)]
+      else fanOut(live) { (task, mine) =>
+        val segFruits = mine.flatMap { case (cq, qi) =>
           val topN = new TopNComputer(kk)
-          QueryKernel.topK(cq, ctx, kk, topN, seg.toLong << 32)
+          QueryKernel.topK(cq, task.ctx, kk, topN, task.segment.toLong << 32)
           topN.intoSortedVec().iterator.map { case (score, addr) => (qi, addr, score) }
+        }.toArray
+        val urls = task.urls(segFruits.iterator.map(f => (f._2 & 0xffffffffL).toInt).toSet)
+        segFruits.iterator.map { case (qi, addr, score) =>
+          (qi, addr, score, urls((addr & 0xffffffffL).toInt))
         }
       }.collect()
     // merge fruits: pushes must arrive in ascending global address order
-    val addrRows = fruits.groupBy(_._1).toSeq.flatMap { case (qi, fs) =>
+    val byQuery = fruits.groupBy(_._1)
+    qs.indices.map { qi =>
+      val fs = byQuery.getOrElse(qi, Array.empty[(Int, Long, Float, String)])
+      val urlOf = fs.iterator.map(f => f._2 -> f._4).toMap
       val merged = new TopNComputer(kk)
-      fs.sortBy(_._2).foreach { case (_, addr, score) => merged.push(score, addr) }
+      fs.sortBy(_._2).foreach { case (_, addr, score, _) => merged.push(score, addr) }
       merged.intoSortedVec().drop(offset).zipWithIndex.map { case ((score, addr), rank) =>
-        (qi, (addr >>> 32).toInt, (addr & 0xffffffffL).toInt, score, offset + rank + 1)
+        SearchHit(offset + rank + 1, urlOf(addr), score, (addr >>> 32).toInt,
+          (addr & 0xffffffffL).toInt)
       }
     }
-    if (addrRows.isEmpty) return qs.map(_ => Array.empty[SearchHit])
-    // fetch stored fields: broadcast the tiny pages against the docmap
-    val addrDF = spark.createDataFrame(addrRows).toDF("qi", "segment", "docId", "score", "rank")
-    val fetched = docmapDF
-      .where(col("segment").isin(addrRows.map(_._2).distinct: _*))
-      .join(broadcast(addrDF), Seq("segment", "docId"))
-      .select("qi", "rank", "url", "score", "segment", "docId")
-      .collect()
-      .groupBy(_.getInt(0))
-    qs.indices.map(qi => fetched.getOrElse(qi, Array.empty[org.apache.spark.sql.Row])
-      .map(r => SearchHit(r.getInt(1), r.getString(2), r.getFloat(3), r.getInt(4), r.getInt(5)))
-      .sortBy(_.rank))
   }
 
   /** Top-k by BM25: per-segment WAND kernels + driver-side fruit merge. */
@@ -483,10 +421,10 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   def topDocs(q: Query, k: Int, offset: Int): Array[SearchHit] = topK(Seq(q), k, offset).head
 
   /** Batched top-k: MANY queries in ONE kernel job — the bulk-scoring path
-    * (scoring a query log / training-pair generation). One shared stats
-    * aggregate, one pruned scan of the union of all query terms, one task
-    * per (segment, query shard), one collect, per-query driver merges, one
-    * doc-fetch join: per-query driver latency amortizes away.
+    * (scoring a query log / training-pair generation). One dictionary read
+    * plans every query, one task per (segment, query shard) scores and
+    * fetches, one collect, per-query driver merges: per-query driver latency
+    * amortizes away.
     */
   def batchTopDocs(qs: Seq[Query], k: Int): Seq[Array[SearchHit]] = topK(qs, k, 0)
 
@@ -505,8 +443,8 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     val live = planAll(qs).zipWithIndex.filter(_._1 != CQuery.CEmpty)
     val counts =
       if (live.isEmpty) Map.empty[Int, Long]
-      else fanOut(live) { (_, ctx, _, mine) =>
-        mine.map { case (cq, qi) => (qi, QueryKernel.count(cq, ctx)) }
+      else fanOut(live) { (task, mine) =>
+        mine.map { case (cq, qi) => (qi, QueryKernel.count(cq, task.ctx)) }
       }.collect().groupMapReduce(_._1)(_._2)(_ + _)
     qs.indices.map(counts.getOrElse(_, 0L))
   }
@@ -554,9 +492,10 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     val cq = plan(q)
     if (cq == CQuery.CEmpty)
       return Seq.empty[(Int, Int, Float)].toDF("segment", "docId", "score")
-    fanOut(Seq(cq -> 0)) { (seg, ctx, _, mine) =>
+    fanOut(Seq(cq -> 0)) { (task, mine) =>
+      val seg = task.segment
       mine.flatMap { case (c, _) =>
-        QueryKernel.allMatches(c, ctx, scored).map { case (d, s) => (seg, d, s) }
+        QueryKernel.allMatches(c, task.ctx, scored).map { case (d, s) => (seg, d, s) }
       }
     }.toDF("segment", "docId", "score")
   }
@@ -566,14 +505,15 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * `InvertedIndexReader::read_postings`, `src/index/inverted_index_reader.rs`):
     * the full posting stream of one term — every alive (segment, docId,
     * termFreq, positions) — as a DataFrame. One task per segment decodes
-    * that term's single posting row off the pruned scan, so a hot term's
+    * that term's single posting row off its pruned read, so a hot term's
     * corpus-wide stream never funnels through the driver; positions are the
     * analyzer's 0-based token ordinals (gap semantics included). The field
     * must be positions-indexed (analyzed TEXT/JSON — the reference's
     * `IndexRecordOption::WithFreqsAndPositions`).
     */
   def termDocsAndPositions(field: String, term: String): DataFrame =
-    fanOut(Seq(plan(Query.Term(field, term)) -> 0)) { (seg, ctx, _, _) =>
+    fanOut(Seq(plan(Query.Term(field, term)) -> 0)) { (task, _) =>
+      val (seg, ctx) = (task.segment, task.ctx)
       val p = ctx.fresh(field, term)
       if (p == null) Iterator.empty
       else new Iterator[(Int, Int, Int, Array[Int])] {
@@ -605,39 +545,44 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
 
   /** Score explanation for one (segment, docId) address — the reference's
     * `Query::explain` (`src/query/query.rs`, `weight.rs:75`). The one
-    * segment's kernel rows are collected to the driver (a pruned read of the
-    * query terms' postings for that segment only) and the scorer DAG is
-    * replayed locally; None when the doc does not match.
+    * segment's kernel rows are read on the driver (the query terms'
+    * postings for that segment only) and the scorer DAG is replayed
+    * locally; None when the doc does not match.
     */
   def explain(q0: Query, segment: Int, docId: Int): Option[Explanation] = {
     val cq = plan(q0)
     if (cq == CQuery.CEmpty) return None
-    val rows = postingsDF.where(col("segment") === segment && kernelCond(Seq(cq)))
-      .as[PostingRow].collect()
-    QueryKernel.explain(cq, Searcher.makeContext(rows.iterator, kernelState, segment), docId)
+    val rows = Array.newBuilder[PostingRow]
+    readRows(filesBySeg.get(segment).toSeq, SegmentFiles.KernelColumns, kernelClauses(Seq(cq)))(rows += _)
+    QueryKernel.explain(cq, Searcher.makeContext(rows.result().iterator, kernelState, segment), docId)
   }
 
-  /** Explain by stored key (url): resolves the address via the docmap. */
-  def explain(q0: Query, url: String): Option[Explanation] =
-    docmapDF.where(col("url") === url).select("segment", "docId").collect()
-      .headOption.flatMap(r => explain(q0, r.getInt(0), r.getInt(1)))
+  /** Explain by stored key (url): resolves the address from the segments'
+    * `__doc__` rows.
+    */
+  def explain(q0: Query, url: String): Option[Explanation] = {
+    val addrs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    readRows(segmentFiles, SegmentFiles.DocColumns, Seq(Terms(PostingRow.DocField, Set(url))))(r =>
+      addrs += r.segment -> r.docFreq)
+    addrs.sortBy(a => manifest.segmentIds.indexOf(a._1)).headOption
+      .flatMap { case (s, d) => explain(q0, s, d) }
+  }
 
   /** Driver-side dead-doc resolution for the merge purge: the full dead set
     * (term tombstones + delete-query tombstones) per requested segment, off
-    * ONE pruned read of the tombstones' own term/range/norms rows — the
-    * same per-segment assembly the kernel tasks do, replayed locally so the
+    * a driver read of the tombstones' own term/range/norms rows — the same
+    * per-segment assembly the kernel tasks do, replayed locally so the
     * merger never needs its own resolution logic.
     */
   def resolveDeadDocs(segments: Seq[Int]): Map[Int, Array[Int]] = {
     val affected = segments.filter(s =>
       deleteTermsBySeg.contains(s) || deleteQueriesBySeg.contains(s))
     if (affected.isEmpty) return Map.empty
-    val rows = postingsDF.where(col("segment").isin(affected: _*) && kernelCond(Nil))
-      .as[PostingRow].collect()
-      .groupBy(_.segment)
+    val clauses = kernelClauses(Nil)
     affected.map { s =>
-      s -> Searcher.makeContext(rows.getOrElse(s, Array.empty[PostingRow]).iterator,
-        kernelState, s).deleted
+      val rows = Array.newBuilder[PostingRow]
+      readRows(filesBySeg.get(s).toSeq, SegmentFiles.KernelColumns, clauses)(rows += _)
+      s -> Searcher.makeContext(rows.result().iterator, kernelState, s).deleted
     }.filter(_._2.nonEmpty).toMap
   }
 
@@ -646,20 +591,19 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * with facet `/a/b/c` counts toward child `/a/b` of root `/a` because the
     * builder indexes every ancestor prefix as its own term — so each child's
     * count is |postings(child) ∩ matches|, computed per segment inside the
-    * kernel task (the facet rows ride the same pruned scan as the query
+    * kernel task (the facet rows ride the same pruned read as the query
     * terms) and summed across segments by one tiny groupBy.
     */
   def facetCounts(q0: Query, field: String, root: String): DataFrame = {
     val cq = plan(q0)
     if (cq == CQuery.CEmpty) return Seq.empty[(String, Long)].toDF("facet", "count")
     val prefix = (if (root.endsWith("/")) root.dropRight(1) else root) + "/"
-    fanOut(Seq(cq -> 0), Some(col("field") === field && col("term").startsWith(prefix))) {
-      (_, ctx, rows, mine) =>
-        val matched = new java.util.BitSet(ctx.numDocs)
+    fanOut(Seq(cq -> 0), Seq(SegmentFiles.Prefix(field, prefix))) { (task, mine) =>
+        val matched = new java.util.BitSet(task.ctx.numDocs)
         mine.foreach { case (c, _) =>
-          QueryKernel.allMatches(c, ctx, scored = false).foreach { case (d, _) => matched.set(d) }
+          QueryKernel.allMatches(c, task.ctx, scored = false).foreach { case (d, _) => matched.set(d) }
         }
-        rows.iterator
+        task.rows.iterator
           .filter(r => r.field == field && r.term.startsWith(prefix) &&
             r.term.indexOf('/', prefix.length) < 0)
           .map { r =>
@@ -699,13 +643,15 @@ object Searcher {
       deleteTermsBySeg: Map[Int, Seq[(String, String)]], primaryField: String,
       deleteQueriesBySeg: Map[Int, Seq[CQuery]])
 
-  private def inBounds(term: String, lo: Option[String], hi: Option[String],
-      loInc: Boolean, hiInc: Boolean): Boolean =
-    lo.forall(v => if (loInc) term >= v else term > v) &&
-      hi.forall(v => if (hiInc) term <= v else term < v)
 
-  private def covers(rg: CQuery.CRange, r: PostingRow): Boolean =
-    rg.field == r.field && inBounds(r.term, rg.lo, rg.hi, rg.loInclusive, rg.hiInclusive)
+  /** One kernel task's segment: its files, its assembled context and rows. */
+  private[search] final case class SegmentTask(files: SegmentFiles, conf: Configuration,
+      ctx: QueryKernel.SegmentContext, rows: Array[PostingRow]) {
+    def segment: Int = files.segment
+    /** Stored urls of `docIds`, read from this segment's `__doc__` rows. */
+    def urls(docIds: Set[Int]): Map[Int, String] =
+      if (docIds.isEmpty) Map.empty else files.urls(conf, docIds)
+  }
 
   /** Time-travel reader: the index exactly as of commit `seq` (Iceberg-style
     * snapshot read over the `manifests/` log). Requires the snapshot to be
@@ -718,11 +664,10 @@ object Searcher {
   /** Longest literal prefix of a regex pattern. The reference's regex query
     * walks the FST only under the automaton's common prefix
     * (`tantivy-fst` `Stream` over an `Automaton`,
-    * `/root/reference/src/query/automaton_weight.rs:37-55`); the Spark analog
-    * is a `startsWith` predicate alongside the `rlike`, which the Parquet
-    * scan turns into min/max row-group pruning over the sorted `term`
-    * column — the dictionary walk touches only the prefix's range instead of
-    * the whole vocabulary. Conservative: stops at the first metacharacter,
+    * `src/query/automaton_weight.rs:37-55`); here the walk
+    * reads only the prefix's term range, which the Parquet statistics and
+    * column indexes over the sorted `term` column prune to — the dictionary
+    * walk touches only the prefix's range instead of the whole vocabulary. Conservative: stops at the first metacharacter,
     * and drops the last literal when a quantifier makes it optional.
     */
   def literalPrefix(p: String): String = {
@@ -844,7 +789,7 @@ object Searcher {
         case Some(r) => cursor(r)
         case None => null
       }
-    // segment-local dictionary range walk: the pruned scan already
+    // segment-local dictionary range walk: the pruned read already
     // restricted rows to the union of the batch's term + range conditions,
     // so re-filtering by THIS range's bounds is exact
     val rangeFor: (String, Option[String], Option[String], Boolean, Boolean) =>
@@ -852,7 +797,8 @@ object Searcher {
       (f, lo, hi, loInc, hiInc) => byField.get(f) match {
         case None => Array.empty[graft.codec.SegmentPostings]
         case Some(rs) =>
-          rs.iterator.filter(r => inBounds(r.term, lo, hi, loInc, hiInc)).map(cursor).toArray
+          rs.iterator.filter(r => SegmentFiles.inBounds(r.term, lo, hi, loInc, hiInc))
+            .map(cursor).toArray
       }
     val nbf = normsByField.toMap
     def build(dead: Array[Int]) =

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Prints the physical plans of the hot paths so pushdown/pruning claims are
-  * verifiable: the postings term lookup must show PushedFilters on (field,
-  * term) and a pruned ReadSchema; pipeline ops must stay inside
-  * WholeStageCodegen.
+  * verifiable: the docmap fetch must show PushedFilters and a pruned
+  * ReadSchema; pipeline ops must stay inside WholeStageCodegen. (Query
+  * planning and kernel reads go through `SegmentFiles`, not Spark scans.)
   */
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
@@ -18,22 +18,6 @@ object ExplainProbe {
 
     val sfDir = "/root/testdata/sf0.001"
     val searcher = graft.SparkEntry.searcherFor(spark, sfDir)
-
-    println("==== postings term-lookup scan (docFreqs path) ====")
-    val indexDir = graft.SparkEntry.indexDirFor(spark, sfDir)
-    spark.read.parquet(s"$indexDir/postings")
-      .where(col("field") === "text" && col("term").isin("spark", "table"))
-      .groupBy("field", "term").agg(sum("docFreq"))
-      .explain("formatted")
-
-    println("==== typed bytes dictionary range scan (q_search_bytes path) ====")
-    // the engine's TypedRange rides the same pruned scan: the sorted hex
-    // term space makes byte-array ranges plain string comparisons the
-    // Parquet reader can evaluate from row-group stats
-    spark.read.parquet(s"$indexDir/postings")
-      .where(col("field") === "dig" && col("term") >= "10000000" && col("term") < "30000000")
-      .select("segment", "term", "docFreq")
-      .explain("formatted")
 
     println("==== docmap fetch (doc-store join) ====")
     searcher.docmapDF.where(col("segment") === 0 && col("docId") === 5).explain("formatted")

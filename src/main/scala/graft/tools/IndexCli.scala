@@ -110,8 +110,7 @@ object IndexCli {
       val field = args.lift(2).getOrElse("text")
       val prefix = args.lift(3).getOrElse("")
       val s = new Searcher(spark, dir)
-      val ts = s.expandTerms(field,
-        org.apache.spark.sql.functions.col("term").startsWith(prefix), max = 50)
+      val ts = s.dictionaryTerms(Query.Prefix(field, prefix, 50))
       val dfs = s.docFreqs(ts.map(t => (field, t)).toSet)
       ts.foreach(t => println(f"${dfs.getOrElse((field, t), 0L)}%9d  $t"))
     case "stats" =>

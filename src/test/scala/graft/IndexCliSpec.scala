@@ -43,5 +43,15 @@ class IndexCliSpec extends AnyFunSuite {
 
     val stats = capture("stats", dir)
     assert(stats.contains("docs=300") && stats.contains("total index bytes"))
+
+    // dictionary walk: term + global doc freq, the prefix's first 50 terms
+    val terms = capture("terms", dir, "text", "al").trim.linesIterator.toSeq
+      .map(_.trim.split("\\s+", 2)).map(a => (a(1), a(0).toLong))
+    val ref = spark.read.parquet(s"$dir/postings")
+      .where($"field" === "text" && $"term".startsWith("al"))
+      .groupBy("term").agg(org.apache.spark.sql.functions.sum("docFreq"))
+      .orderBy("term").limit(50)
+      .as[(String, Long)].collect().toSeq
+    assert(terms.nonEmpty && terms == ref)
   }
 }

@@ -66,6 +66,33 @@ class SnapshotSpec extends AnyFunSuite {
     intercept[IllegalStateException](Searcher.atSnapshot(spark, dir, 1L))
   }
 
+  test("kernel tasks read only their manifest's segment files; merged segments are multi-file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap-files").toString
+    val docs = WebCorpus.generate(spark, 400L, 3)
+    val m1 = IndexBuilder.build(spark, docs.toDF(), dir, IndexConfig(numPartitions = 4))
+    val batch = queries ++ Seq(Query.Prefix("text", "al"),
+      Query.Fuzzy("text", "alpah", 1, transpositionCostOne = true),
+      Query.should(Query.Term("text", "alpha"), Query.Term("text", "beta")))
+    def fingerprint(s: Searcher) =
+      (s.batchTopDocs(batch, 10).map(_.map(h =>
+        (h.url, java.lang.Float.floatToRawIntBits(h.score))).toList), s.batchCount(batch))
+    val base = fingerprint(new Searcher(spark, dir))
+
+    val m2 = SegmentMerger.merge(spark, dir, SegmentMerger.plan(m1, 4), keepOld = true)
+    val merged = new java.io.File(s"$dir/postings/segment=${m2.segments.head.segment}")
+    assert(merged.listFiles.count(_.getName.endsWith(".parquet")) > 1)
+    assert(fingerprint(Searcher.atSnapshot(spark, dir, m1.commitSeq)) == base)
+    val current = new Searcher(spark, dir)
+    assert(fingerprint(current) == base)
+
+    // a retained pre-merge segment directory disappears: the current
+    // searcher never lists it, so it still answers identically
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings/segment=${m1.segmentIds.head}"), true)
+    assert(fingerprint(current) == base)
+    assert(fingerprint(new Searcher(spark, dir)) == base)
+  }
+
   test("incremental appends compose with retention; colliding id range fails loudly") {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap2").toString
     val docs = WebCorpus.generate(spark, 300L, 3)
