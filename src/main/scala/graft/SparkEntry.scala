@@ -694,7 +694,7 @@ object SparkEntry {
     // within-cell-only recipe that serves semDedup is not enough here);
     // driver row = pair-recall gate vs the exact kernel plus the
     // cos-identity check (agreed pairs must carry the SAME 4dp cosine —
-    // both paths share the packBlock fold). n_approx is dropped: the
+    // both paths share the VecBlocks fold). n_approx is dropped: the
     // candidate set is a genuine subset, so the approximate side's row
     // count varies with the draw's cell geometry and is not
     // oracle-replayable. Gate 850 = regression floor on this noise

@@ -1264,7 +1264,7 @@ FROM r WHERE (kind = 'pos' AND rank <= $kPos) OR (kind = 'neg' AND rank <= $kNeg
     * path vs the exact dual-heap kernel the [[contrastivePairs]] oracle
     * replays — recall_ok/cos_ok are the driver-checked gates (the
     * within-cell candidate set is a subset, so agreed pairs carry
-    * bit-identical 4dp cosines by the shared packBlock fold);
+    * bit-identical 4dp cosines by the shared VecBlocks fold);
     * n_exact and the exact band-floor cosine are independent content.
     */
   def contrastivePairsRecall(kPos: Int, posLo: Double, posHi: Double,

@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import VecBlocks._
 
 /** Training-data pipeline operators over the `documents` / `embeddings`
   * tables — all expressed with codegen'd built-in functions (no UDFs), so
@@ -413,57 +416,6 @@ object PipelineOps {
     dot / (na * nb)
   }
 
-  /** One block of vectors packed for the pair kernel: sorted ids, row-major
-    * values, per-row norms (sqrt of the sequential self-dot — the same fold
-    * order as `cosineExpr` and DuckDB's `list_dot_product`, so pair cosines
-    * stay bit-identical to the expression form).
-    */
-  final case class VecBlock(bid: Int, ids: Array[Long], flat: Array[Double],
-      norms: Array[Double], dim: Int)
-
-  /** Packs one block for the pair kernels — THE canonical id-sort /
-    * flatten / sequential-self-dot-norm fold every blocked kernel shares
-    * (a second copy with a different fold order would silently break the
-    * bit-identical-cosine cross-engine contract above).
-    */
-  private[ops] def packBlock(bid: Int, rows: Array[(Long, Array[Double])]): VecBlock = {
-    val sorted = rows.sortBy(_._1)
-    val n = sorted.length
-    val dim = if (n == 0) 0 else sorted(0)._2.length
-    val ids = new Array[Long](n)
-    val flat = new Array[Double](n * dim)
-    val norms = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      ids(i) = sorted(i)._1
-      val v = sorted(i)._2
-      var s = 0.0; var j = 0
-      while (j < dim) { val x = v(j); flat(i * dim + j) = x; s += x * x; j += 1 }
-      norms(i) = math.sqrt(s)
-      i += 1
-    }
-    VecBlock(bid, ids, flat, norms, dim)
-  }
-
-  /** Worst-first ordering for bounded top heaps: lowest cos, then HIGHEST
-    * id — the inverse of the result order (cos desc, id asc).
-    */
-  private[ops] val WorstFirst: Ordering[(Double, Long)] =
-    Ordering.by((t: (Double, Long)) => (-t._1, t._2))
-
-  /** Bounded-heap insert under the shared (cos desc, id asc) result law. */
-  private[ops] def heapPush(
-      h: scala.collection.mutable.PriorityQueue[(Double, Long)],
-      cap: Int, cos: Double, id: Long): Unit = {
-    if (cap > 0) {
-      if (h.size < cap) h.enqueue((cos, id))
-      else {
-        val (wc, wid) = h.head
-        if (cos > wc || (cos == wc && id < wid)) { h.dequeue(); h.enqueue((cos, id)) }
-      }
-    }
-  }
-
   /** Exact embedding near-dup pairs above a cosine threshold, as a
     * block-matrix kernel: vectors hash into `blocks` blocks, each of the
     * B(B+1)/2 block pairs is one task computing its dense dot products over
@@ -480,49 +432,13 @@ object PipelineOps {
     */
   def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double,
       blocks: Int = 0): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val nb = if (blocks > 0) blocks else math.max(8, spark.sparkContext.defaultParallelism)
-    val packed = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        pmod(col("vec_id"), lit(nb)).cast("int").as("bid"))
-      .as[(Long, Array[Double], Int)]
-      .groupByKey(_._3)
-      .mapGroups { (bid, it) =>
-        packBlock(bid, it.map(t => (t._1, t._2)).toArray)
-      }
-    packed.as("a").joinWith(packed.as("b"), $"a.bid" <= $"b.bid", "inner")
-      .repartition(nb)
-      .flatMap { case (a, b) =>
-        val same = a.bid == b.bid
-        val dim = a.dim
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        var i = 0
-        while (i < a.ids.length) {
-          var j = if (same) i + 1 else 0
-          while (j < b.ids.length) {
-            var dot = 0.0
-            var k = 0
-            val ai = i * dim
-            val bj = j * dim
-            while (k < dim) {
-              dot += a.flat(ai + k) * b.flat(bj + k)
-              k += 1
-            }
-            val cos = dot / (a.norms(i) * b.norms(j))
-            if (cos >= threshold) {
-              val x = a.ids(i); val y = b.ids(j)
-              out += (if (x < y) (x, y, cos) else (y, x, cos))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      .toDF("ia", "ib", "c")
-      .select(col("ia"), col("ib"), round(col("c"), 4).as("cos"))
+    import embeddings.sparkSession.implicits._
+    cosPairs(gridPairs(embeddings, blocks)((a, b) => pairsAbove(a, b, gridMode(a, b), threshold)))
   }
+
+  /** (ia, ib, c) pairs as (ia, ib, cos) with cos rounded to 4 dp. */
+  private def cosPairs(pairs: Dataset[(Long, Long, Double)]): DataFrame =
+    pairs.toDF("ia", "ib", "c").select(col("ia"), col("ib"), round(col("c"), 4).as("cos"))
 
   /** IVF-celled near-dup candidate pairs — the SemDeDup paper's own
     * sub-quadratic recipe (Abbas et al. 2023 §3: k-means the corpus, then
@@ -555,116 +471,19 @@ object PipelineOps {
     */
   def embeddingNearDupPairsIvf(embeddings: DataFrame, threshold: Double,
       nCentroids: Int = 16, nprobe: Int = 1): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    if (nprobe > 1) return embeddingNearDupPairsIvfProbed(
-      embeddings, threshold, nCentroids, nprobe)
-    val (assigned, _) = ivfAssignments(embeddings, nCentroids)
-    embeddings
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .join(assigned, "vec_id")
-      .as[(Long, Array[Double], Int)]
-      .groupByKey(_._3)
-      .mapGroups { (cell, it) => packBlock(cell, it.map(t => (t._1, t._2)).toArray) }
-      .flatMap { b =>
-        val dim = b.dim
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        var i = 0
-        while (i < b.ids.length) {
-          var j = i + 1
-          while (j < b.ids.length) {
-            var dot = 0.0
-            var k = 0
-            val ai = i * dim
-            val bj = j * dim
-            while (k < dim) { dot += b.flat(ai + k) * b.flat(bj + k); k += 1 }
-            val cos = dot / (b.norms(i) * b.norms(j))
-            if (cos >= threshold) out += ((b.ids(i), b.ids(j), cos))
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      .toDF("ia", "ib", "c")
-      .select(col("ia"), col("ib"), round(col("c"), 4).as("cos"))
-  }
-
-  /** nprobe>1 body of [[embeddingNearDupPairsIvf]]: the [[knnGraphIvf]]
-    * probe fan-out (each vector joins its nprobe nearest cells' member
-    * blocks), pair emission thresholded instead of top-k. An unordered
-    * pair can surface through several (prober, cell) routes — the cosine
-    * is the same shared-fold double on every route, so the (ia, ib)
-    * dedup keeps an arbitrary survivor.
-    */
-  private def embeddingNearDupPairsIvfProbed(embeddings: DataFrame,
-      threshold: Double, nCentroids: Int, nprobe: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
+    import embeddings.sparkSession.implicits._
+    requirePositive("nCentroids" -> nCentroids, "nprobe" -> nprobe)
     val (assigned, centers) = ivfAssignments(embeddings, nCentroids)
-    val bc = spark.sparkContext.broadcast(centers)
-    val e = embeddings.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    val members = e.join(assigned, "vec_id")
-      .select(col("cluster"), col("vec_id"), col("v"))
-      .as[(Int, Long, Array[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (cell, it) => packBlock(cell, it.map(t => (t._2, t._3)).toArray) }
-    val probes = e.as[(Long, Array[Double])].mapPartitions { it =>
-      val cs = bc.value
-      it.flatMap { case (id, v) =>
-        var s = 0.0; var j = 0
-        while (j < v.length) { s += v(j) * v(j); j += 1 }
-        val nrm = math.sqrt(s)
-        val nv = if (nrm > 0) v.map(_ / nrm) else v
-        val ds = Array.tabulate(cs.length) { c =>
-          val cc = cs(c)
-          var d = 0.0; var i = 0
-          while (i < nv.length) { val t = cc(i) - nv(i); d += t * t; i += 1 }
-          (d, c)
-        }
-        ds.sortBy(t => (t._1, t._2)).take(math.min(nprobe, cs.length))
-          .iterator.map { case (_, c) => (c, id, v) }
-      }
-    }.toDF("cluster", "vec_id", "v")
-      .as[(Int, Long, Array[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (cell, it) => packBlock(cell, it.map(t => (t._2, t._3)).toArray) }
-    probes.as("p").joinWith(members.as("m"), $"p.bid" === $"m.bid", "inner")
-      .flatMap { case (p, m) =>
-        val dim = p.dim
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        var i = 0
-        while (i < p.ids.length) {
-          var j = 0
-          while (j < m.ids.length) {
-            if (p.ids(i) != m.ids(j)) {
-              var dot = 0.0; var a = i * dim; var b = j * dim; var z = 0
-              while (z < dim) { dot += p.flat(a) * m.flat(b); a += 1; b += 1; z += 1 }
-              val cos = dot / (p.norms(i) * m.norms(j))
-              if (cos >= threshold)
-                out += ((math.min(p.ids(i), m.ids(j)),
-                  math.max(p.ids(i), m.ids(j)), cos))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      .toDF("ia", "ib", "c")
-      .dropDuplicates(Seq("ia", "ib"))
-      .select(col("ia"), col("ib"), round(col("c"), 4).as("cos"))
+    if (nprobe == 1)
+      cosPairs(cellBlocks(embeddings, assigned).flatMap(b => pairsAbove(b, b, Upper, threshold)))
+    else
+      // an unordered pair can surface through several (prober, cell)
+      // routes, each with the same shared-fold cosine, so the (ia, ib)
+      // dedup keeps an arbitrary survivor
+      cosPairs(probePairs(embeddings, assigned, centers, nprobe)(
+        (p, m) => pairsAbove(p, m, SkipSelf, threshold)).dropDuplicates("_1", "_2"))
   }
 
-  /** Random-hyperplane LSH buckets for ANN at scale: `nBits` sign bits from
-    * fixed pseudo-random hyperplanes (deterministic, seed-derived). Bucket
-    * join replaces the cross join; brute-force cosine runs within buckets.
-    * The sign bits come from the native [[graft.functions.VecKernel]] kernel
-    * (one primitive pass per row, whole-stage codegen); bit-parity with the
-    * declarative HOF form below is pinned by SimilaritySpec.
-    */
   /** IVF coarse-quantizer ANN — the clustering-based scale path (the IVF
     * stage of Jégou et al., "Product Quantization for Nearest Neighbor
     * Search", TPAMI 2011, without the PQ residual codes): spherical k-means
@@ -688,103 +507,16 @@ object PipelineOps {
       seed: Long = 20260818L, maxTrainSample: Int = 16384): (DataFrame, Array[Array[Double]]) = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val v = col("embedding").cast("array<double>")
-    val norm = sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
-    val normed = embeddings.select(col("vec_id").cast("long").as("vec_id"),
-      transform(v, x => x / norm).as("nv"))
-    // deterministic sample: top-maxTrainSample by vector-id hash (TakeOrdered
-    // — per-partition top-k + driver merge, no full shuffle)
-    val sample: Array[Array[Double]] = normed
-      .orderBy(xxhash64(col("vec_id"))).limit(maxTrainSample)
-      .select("nv").as[Seq[Double]].collect().map(_.toArray)
-    val centers = sphericalLloyd(sample, nCentroids, seed, iters = 10)
+    requirePositive("nCentroids" -> nCentroids)
+    val normed = unitRows(embeddings)
+    val centers = lloyd(trainingSample(normed, maxTrainSample), nCentroids, seed, iters = 10,
+      spherical = true)
     val bc = spark.sparkContext.broadcast(centers)
     val assigned = normed.as[(Long, Seq[Double])].mapPartitions { it =>
       val cs = bc.value
-      it.map { case (id, nv) =>
-        val x = nv.toArray
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cs.length) {
-          val cc = cs(c)
-          var s = 0.0
-          var i = 0
-          while (i < x.length) { val d = cc(i) - x(i); s += d * d; i += 1 }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        (id, best)
-      }
+      it.map { case (id, nv) => (id, nearest(cs, nv.toArray)) }
     }.toDF("vec_id", "cluster")
     (assigned, centers)
-  }
-
-  /** Seeded Lloyd's iterations with spherical re-normalization of centroids
-    * (Dhillon & Modha, "Concept Decompositions for Large Sparse Text Data
-    * Using Clustering", ML 2001); empty clusters reseed to a random sample
-    * point. Pure driver compute over the bounded training sample.
-    */
-  private def sphericalLloyd(sample: Array[Array[Double]], k: Int, seed: Long,
-      iters: Int): Array[Array[Double]] = {
-    require(sample.nonEmpty, "empty training sample")
-    val rnd = new scala.util.Random(seed)
-    val n = sample.length
-    val dim = sample(0).length
-    val kk = math.min(k, n)
-    val centers = Array.fill(kk)(sample(rnd.nextInt(n)).clone())
-    val assign = new Array[Int](n)
-    var round = 0
-    while (round < iters) {
-      // assignment is the O(n·k·dim) term and every element is independent
-      // (each i writes only assign(i)) — a parallel loop is bit-identical
-      // to the serial one at any thread count. At the documented
-      // C ∝ corpus rule this step would otherwise serialize the whole op:
-      // C=320 × 16384 samples measured ~10 s single-core per training,
-      // flattening the 8→32-core scaling of the IVF family's probes.
-      // The RNG-consuming reseed path stays in the serial update below.
-      java.util.stream.IntStream.range(0, n).parallel().forEach { i =>
-        val x = sample(i)
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < kk) {
-          val cc = centers(c)
-          var s = 0.0
-          var j = 0
-          while (j < dim) { val d = cc(j) - x(j); s += d * d; j += 1 }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        assign(i) = best
-      }
-      val sums = Array.ofDim[Double](kk, dim)
-      val cnt = new Array[Int](kk)
-      var i = 0
-      while (i < n) {
-        val c = assign(i)
-        cnt(c) += 1
-        val x = sample(i)
-        var j = 0
-        while (j < dim) { sums(c)(j) += x(j); j += 1 }
-        i += 1
-      }
-      var c = 0
-      while (c < kk) {
-        if (cnt(c) == 0) centers(c) = sample(rnd.nextInt(n)).clone()
-        else {
-          var nrm = 0.0
-          var j = 0
-          while (j < dim) { sums(c)(j) /= cnt(c); nrm += sums(c)(j) * sums(c)(j); j += 1 }
-          nrm = math.sqrt(nrm)
-          if (nrm > 0) { j = 0; while (j < dim) { sums(c)(j) /= nrm; j += 1 } }
-          centers(c) = sums(c)
-        }
-        c += 1
-      }
-      round += 1
-    }
-    centers
   }
 
   /** ANN top-k through the IVF lists: rank centroids against the query on
@@ -794,21 +526,20 @@ object PipelineOps {
     */
   def ivfTopK(embeddings: DataFrame, queryVecId: Long, k: Int,
       nCentroids: Int, nprobe: Int): DataFrame = {
+    requirePositive("k" -> k, "nCentroids" -> nCentroids, "nprobe" -> nprobe)
     val (assigned, centers) = ivfAssignments(embeddings, nCentroids)
-    val qRaw = embeddings.where(col("vec_id") === queryVecId)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val qn = math.sqrt(qRaw.map(x => x * x).sum)
-    val q = qRaw.map(_ / qn)
-    val probes = centers.zipWithIndex.sortBy { case (c, _) =>
-      var s = 0.0
-      var i = 0
-      while (i < c.length) { val d = c(i) - q(i); s += d * d; i += 1 }
-      s
-    }.take(nprobe).map(_._2).toIndexedSeq
-    val candIds = assigned.where(col("cluster").isin(probes: _*)).select("vec_id")
+    val probes = nearestN(centers, unitQuery(embeddings, queryVecId), nprobe)
+    val candIds = assigned.where(col("cluster").isin(probes.toIndexedSeq: _*)).select("vec_id")
     cosineTopK(embeddings.join(candIds, "vec_id"), queryVecId, k)
   }
 
+  /** Random-hyperplane LSH buckets for ANN at scale: `nBits` sign bits from
+    * fixed pseudo-random hyperplanes (deterministic, seed-derived). Bucket
+    * join replaces the cross join; brute-force cosine runs within buckets.
+    * The sign bits come from the native [[graft.functions.VecKernel]] kernel
+    * (one primitive pass per row, whole-stage codegen); bit-parity with the
+    * declarative HOF form below is pinned by SimilaritySpec.
+    */
   def annBuckets(embeddings: DataFrame, nBits: Int): DataFrame =
     embeddings.select(col("vec_id"),
       graft.functions.VecOps.lsh_bucket(
@@ -869,74 +600,8 @@ object PipelineOps {
     */
   def pqTrain(embeddings: DataFrame, m: Int, nbits: Int = 8,
       seed: Long = 20260820L, maxTrainSample: Int = 16384): Array[Array[Array[Double]]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val v = col("embedding").cast("array<double>")
-    val norm = sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
-    val sample: Array[Array[Double]] = embeddings
-      .select(col("vec_id").cast("long").as("vec_id"), transform(v, x => x / norm).as("nv"))
-      .orderBy(xxhash64(col("vec_id"))).limit(maxTrainSample)
-      .select("nv").as[Seq[Double]].collect().map(_.toArray)
-    require(sample.nonEmpty, "empty PQ training sample")
-    val dim = sample(0).length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val k = 1 << nbits
-    Array.tabulate(m) { j =>
-      val slice = sample.map(x => java.util.Arrays.copyOfRange(x, j * sub, (j + 1) * sub))
-      plainLloyd(slice, k, seed + j, iters = 10)
-    }
-  }
-
-  /** Plain (Euclidean) Lloyd's over the bounded sample — the subspace
-    * quantizer for PQ; unlike [[sphericalLloyd]] centroids are NOT
-    * renormalized (subvectors of unit vectors are not unit vectors).
-    */
-  private def plainLloyd(sample: Array[Array[Double]], k: Int, seed: Long,
-      iters: Int): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    val n = sample.length
-    val dim = sample(0).length
-    val kk = math.min(k, n)
-    val centers = Array.fill(kk)(sample(rnd.nextInt(n)).clone())
-    val assign = new Array[Int](n)
-    var round = 0
-    while (round < iters) {
-      var i = 0
-      while (i < n) {
-        val x = sample(i)
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < kk) {
-          val cc = centers(c)
-          var s = 0.0; var j = 0
-          while (j < dim) { val d = cc(j) - x(j); s += d * d; j += 1 }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        assign(i) = best
-        i += 1
-      }
-      val sums = Array.ofDim[Double](kk, dim)
-      val cnt = new Array[Int](kk)
-      i = 0
-      while (i < n) {
-        val c = assign(i); cnt(c) += 1
-        val x = sample(i)
-        var j = 0
-        while (j < dim) { sums(c)(j) += x(j); j += 1 }
-        i += 1
-      }
-      var c = 0
-      while (c < kk) {
-        if (cnt(c) == 0) centers(c) = sample(rnd.nextInt(n)).clone()
-        else { var j = 0; while (j < dim) { sums(c)(j) /= cnt(c); j += 1 }; centers(c) = sums(c) }
-        c += 1
-      }
-      round += 1
-    }
-    // pad degenerate codebooks (sample smaller than k) so code bytes stay
-    // valid indexes
-    if (kk < k) centers ++ Array.fill(k - kk)(centers(0).clone()) else centers
+    requirePositive("m" -> m)
+    trainBooks(trainingSample(unitRows(embeddings), maxTrainSample), m, 1 << nbits, seed)
   }
 
   /** PQ-encode the corpus: one broadcast-codebooks `mapPartitions` pass
@@ -950,41 +615,11 @@ object PipelineOps {
       books: Array[Array[Array[Double]]]): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val m = books.length
-    val sub = books(0)(0).length
     val bc = spark.sparkContext.broadcast(books)
-    embeddings
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val bks = bc.value
-        it.map { case (id, sv) =>
-          val x = sv.toArray
-          var nrm = 0.0
-          var i = 0
-          while (i < x.length) { nrm += x(i) * x(i); i += 1 }
-          nrm = math.sqrt(nrm)
-          if (nrm > 0) { i = 0; while (i < x.length) { x(i) /= nrm; i += 1 } }
-          val code = new Array[Byte](m)
-          var j = 0
-          while (j < m) {
-            val book = bks(j)
-            val off = j * sub
-            var best = 0; var bestD = Double.MaxValue; var c = 0
-            while (c < book.length) {
-              val cc = book(c)
-              var s = 0.0; var d = 0
-              while (d < sub) { val t = cc(d) - x(off + d); s += t * t; d += 1 }
-              if (s < bestD) { bestD = s; best = c }
-              c += 1
-            }
-            code(j) = best.toByte
-            j += 1
-          }
-          (id, code)
-        }
-      }.toDF("vec_id", "code")
+    vectors(embeddings).as[(Long, Array[Double])].mapPartitions { it =>
+      val bks = bc.value
+      it.map { case (id, v) => (id, pqCode(bks, unit(v))) }
+    }.toDF("vec_id", "code")
   }
 
   /** ANN top-k via a PQ ADC scan (IVFADC's scan stage, Jégou et al. 2011
@@ -1001,48 +636,29 @@ object PipelineOps {
       rerank: Int = 50): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
+    requirePositive("k" -> k, "m" -> m, "rerank" -> rerank)
     val books = pqTrain(embeddings, m)
     val codes = pqEncode(embeddings, books)
-    val qRaw = embeddings.where(col("vec_id") === queryVecId)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val qn = math.sqrt(qRaw.map(x => x * x).sum)
-    val q = qRaw.map(_ / qn)
-    val sub = books(0)(0).length
+    val bcLut = spark.sparkContext.broadcast(adcTable(books, unitQuery(embeddings, queryVecId)))
     val kCent = books(0).length
-    val lut = new Array[Double](m * kCent)
-    var j = 0
-    while (j < m) {
-      val off = j * sub
-      var c = 0
-      while (c < kCent) {
-        val cc = books(j)(c)
-        var s = 0.0; var d = 0
-        while (d < sub) { val t = cc(d) - q(off + d); s += t * t; d += 1 }
-        lut(j * kCent + c) = s
-        c += 1
-      }
-      j += 1
-    }
-    val bcLut = spark.sparkContext.broadcast(lut)
-    val cands = codes.as[(Long, Array[Byte])].mapPartitions { it =>
+    // the query row itself stays in: cosineTopK both needs it (query
+    // lookup) and excludes it from results
+    adcRerank(embeddings, codes.as[(Long, Array[Byte])].mapPartitions { it =>
       val l = bcLut.value
-      // bounded per-partition top-rerank (max-heap on ADC distance)
-      val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-        Ordering.by[(Double, Long), Double](_._1))
-      // the query row itself stays in: cosineTopK both needs it (query
-      // lookup) and excludes it from results
-      it.foreach { case (id, code) =>
-        var s = 0.0; var jj = 0
-        while (jj < code.length) { s += l(jj * kCent + (code(jj) & 0xff)); jj += 1 }
-        if (heap.size < rerank) heap.enqueue((s, id))
-        else if (s < heap.head._1) { heap.dequeue(); heap.enqueue((s, id)) }
-      }
-      heap.iterator
-    }.toDF("adc", "vec_id")
+      adcScan(it.map { case (id, code) => (id, code, l) }, kCent, rerank)
+    }, queryVecId, k, rerank)
+  }
+
+  /** Exact re-rank of an ADC scan's survivors: the `rerank` lowest
+    * (adc, vec_id) rows plus the query row, scored by [[cosineTopK]].
+    */
+  private def adcRerank(embeddings: DataFrame, scanned: Dataset[(Double, Long)],
+      queryVecId: Long, k: Int, rerank: Int): DataFrame = {
+    val cands = scanned.toDF("adc", "vec_id")
       .orderBy(col("adc").asc, col("vec_id")).limit(rerank).select("vec_id")
       // the query row is guaranteed present (ADC self-distance is the
       // quantization floor, but union is cheap insurance for tiny rerank)
-      .union(spark.range(1).select(lit(queryVecId).cast("long").as("vec_id")))
+      .union(embeddings.sparkSession.range(1).select(lit(queryVecId).cast("long").as("vec_id")))
       .distinct()
     cosineTopK(embeddings.join(cands, "vec_id"), queryVecId, k)
   }
@@ -1070,130 +686,37 @@ object PipelineOps {
       seed: Long = 20260820L, maxTrainSample: Int = 16384): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val v = col("embedding").cast("array<double>")
-    val norm = sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
-    val normed = embeddings.select(col("vec_id").cast("long").as("vec_id"),
-      transform(v, x => x / norm).as("nv"))
+    requirePositive("k" -> k, "nCentroids" -> nCentroids, "nprobe" -> nprobe, "m" -> m,
+      "rerank" -> rerank)
+    val normed = unitRows(embeddings)
     // coarse quantizer + residual codebooks, both off the SAME bounded
     // deterministic sample (one collect)
-    val sample: Array[Array[Double]] = normed
-      .orderBy(xxhash64(col("vec_id"))).limit(maxTrainSample)
-      .select("nv").as[Seq[Double]].collect().map(_.toArray)
-    require(sample.nonEmpty, "empty IVF-PQ training sample")
-    val dim = sample(0).length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val centers = sphericalLloyd(sample, nCentroids, seed, iters = 10)
-    @inline def nearestCell(x: Array[Double]): Int = {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < centers.length) {
-        val cc = centers(c)
-        var s = 0.0; var i = 0
-        while (i < x.length) { val d = cc(i) - x(i); s += d * d; i += 1 }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      best
-    }
-    @inline def residual(x: Array[Double], cell: Int): Array[Double] = {
-      val cc = centers(cell)
-      val r = new Array[Double](x.length)
-      var i = 0
-      while (i < x.length) { r(i) = x(i) - cc(i); i += 1 }
-      r
-    }
-    val residSample = sample.map(x => residual(x, nearestCell(x)))
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      val slice = residSample.map(x => java.util.Arrays.copyOfRange(x, j * sub, (j + 1) * sub))
-      plainLloyd(slice, 256, seed + 1 + j, iters = 10)
-    }
+    val sample = trainingSample(normed, maxTrainSample)
+    val centers = lloyd(sample, nCentroids, seed, iters = 10, spherical = true)
+    val books = trainBooks(sample.map(x => residual(x, centers(nearest(centers, x)))), m, 256,
+      seed + 1)
     val bcC = spark.sparkContext.broadcast(centers)
     val bcB = spark.sparkContext.broadcast(books)
     // assign + residual + encode in ONE pass; (cluster, code) per row
     val codes = normed.as[(Long, Seq[Double])].mapPartitions { it =>
-      val cs = bcC.value
-      val bks = bcB.value
-      val mm = bks.length
-      val ss = bks(0)(0).length
-      it.map { case (id, nvSeq) =>
-        val x = nvSeq.toArray
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < cs.length) {
-          val cc = cs(c)
-          var s = 0.0; var i = 0
-          while (i < x.length) { val d = cc(i) - x(i); s += d * d; i += 1 }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        val cc = cs(best)
-        val code = new Array[Byte](mm)
-        var j = 0
-        while (j < mm) {
-          val book = bks(j)
-          val off = j * ss
-          var bc2 = 0; var bd = Double.MaxValue; var ci = 0
-          while (ci < book.length) {
-            val bv = book(ci)
-            var s = 0.0; var d = 0
-            while (d < ss) { val t = bv(d) - (x(off + d) - cc(off + d)); s += t * t; d += 1 }
-            if (s < bd) { bd = s; bc2 = ci }
-            ci += 1
-          }
-          code(j) = bc2.toByte
-          j += 1
-        }
-        (id, best, code)
+      val (cs, bks) = (bcC.value, bcB.value)
+      it.map { case (id, nv) =>
+        val x = nv.toArray
+        val cell = nearest(cs, x)
+        (id, cell, pqCode(bks, residual(x, cs(cell))))
       }
     }.toDF("vec_id", "cluster", "code")
     // query: nprobe nearest cells, one residual LUT per probed cell
-    val qRaw = embeddings.where(col("vec_id") === queryVecId)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val qn = math.sqrt(qRaw.map(x => x * x).sum)
-    val q = qRaw.map(_ / qn)
-    val probes: Array[Int] = centers.zipWithIndex.sortBy { case (c, _) =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { val d = c(i) - q(i); s += d * d; i += 1 }
-      s
-    }.take(nprobe).map(_._2)
+    val q = unitQuery(embeddings, queryVecId)
+    val probes = nearestN(centers, q, nprobe)
+    val bcLuts = spark.sparkContext.broadcast(
+      probes.map(c => c -> adcTable(books, residual(q, centers(c)))).toMap)
     val kCent = books(0).length
-    val luts: Map[Int, Array[Double]] = probes.map { cell =>
-      val rq = residual(q, cell)
-      val lut = new Array[Double](m * kCent)
-      var j = 0
-      while (j < m) {
-        val off = j * sub
-        var c = 0
-        while (c < kCent) {
-          val bv = books(j)(c)
-          var s = 0.0; var d = 0
-          while (d < sub) { val t = bv(d) - rq(off + d); s += t * t; d += 1 }
-          lut(j * kCent + c) = s
-          c += 1
-        }
-        j += 1
-      }
-      cell -> lut
-    }.toMap
-    val bcLuts = spark.sparkContext.broadcast(luts)
-    val probeSeq = probes.toIndexedSeq
-    val cands = codes.where(col("cluster").isin(probeSeq: _*))
+    adcRerank(embeddings, codes.where(col("cluster").isin(probes.toIndexedSeq: _*))
       .as[(Long, Int, Array[Byte])].mapPartitions { it =>
         val ls = bcLuts.value
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by[(Double, Long), Double](_._1))
-        it.foreach { case (id, cell, code) =>
-          val l = ls(cell)
-          var s = 0.0; var jj = 0
-          while (jj < code.length) { s += l(jj * kCent + (code(jj) & 0xff)); jj += 1 }
-          if (heap.size < rerank) heap.enqueue((s, id))
-          else if (s < heap.head._1) { heap.dequeue(); heap.enqueue((s, id)) }
-        }
-        heap.iterator
-      }.toDF("adc", "vec_id")
-      .orderBy(col("adc").asc, col("vec_id")).limit(rerank).select("vec_id")
-      .union(spark.range(1).select(lit(queryVecId).cast("long").as("vec_id")))
-      .distinct()
-    cosineTopK(embeddings.join(cands, "vec_id"), queryVecId, k)
+        adcScan(it.map { case (id, cell, code) => (id, code, ls(cell)) }, kCent, rerank)
+      }, queryVecId, k, rerank)
   }
 
   // ------------------------------------------------ quality / curation ops
@@ -1979,57 +1502,22 @@ object PipelineOps {
     import spark.implicits._
     val qRows = embeddings.where(col("vec_id").isin(queryIds.map(Long.box): _*))
       .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+      .as[(Long, Array[Double])].collect()
     require(qRows.nonEmpty, "no query vectors found")
-    val dim = qRows(0)._2.length
-    val nq = qRows.length
-    val qIds = qRows.map(_._1)
-    val qFlat = new Array[Double](nq * dim)
-    val qNorms = new Array[Double](nq)
-    var qi = 0
-    while (qi < nq) {
-      val v = qRows(qi)._2
-      var j = 0; var s = 0.0
-      while (j < dim) { val x = v(j); qFlat(qi * dim + j) = x; s += x * x; j += 1 }
-      qNorms(qi) = math.sqrt(s)
-      qi += 1
-    }
-    val bc = spark.sparkContext.broadcast((qIds, qFlat, qNorms, dim))
+    val bc = spark.sparkContext.broadcast(packBlock(0, qRows))
     val cand = embeddings
       .where(!col("vec_id").isin(queryIds.map(Long.box): _*))
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
-        val (ids, qf, qn, d) = bc.value
-        val m = ids.length
-        // per-query bounded heap; dequeue removes the WORST entry
-        // (lowest cos, then highest vec_id — the inverse of the result order)
-        val heaps = Array.fill(m)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](WorstFirst))
-        it.foreach { case (vid, v) =>
-          var s = 0.0; var j = 0
-          while (j < d) { val x = v(j); s += x * x; j += 1 }
-          val norm = math.sqrt(s)
-          var q = 0
-          while (q < m) {
-            var dot = 0.0; var p = q * d; var i = 0
-            while (i < d) { dot += qf(p) * v(i); p += 1; i += 1 }
-            heapPush(heaps(q), k, dot / (qn(q) * norm), vid)
-            q += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          h.iterator.map { case (cos, vid) => (ids(q), vid, cos) }
-        }
+        val qs = bc.value
+        // one bounded heap per query, fed one corpus row at a time
+        val heaps = new TopHeaps(qs, null, Array(k), _ => 0)
+        it.foreach { case (vid, v) => pairLoop(qs, row(vid, v), AllPairs, heaps) }
+        heaps.rows.map(t => (t._1, t._2, t._3))
       }
       .toDF("query_id", "vec_id", "c")
-    cand
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id")).orderBy(col("c").desc, col("vec_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("c"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    rankCut(cand, "query_id", "vec_id", k)
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009) of
@@ -2708,9 +2196,7 @@ object PipelineOps {
     var best = 0; var bestD = Double.MaxValue
     var ci = 0
     while (ci < cs.length) {
-      val c = cs(ci); var d = 0.0; var j = 0
-      while (j < v.length) { val t = v(j) - c(j); d += t * t; j += 1 }
-      val dr = math.rint(d * 1e6) / 1e6
+      val dr = math.rint(sqDist(v, 0, cs(ci), 0, v.length) * 1e6) / 1e6
       if (dr < bestD) { bestD = dr; best = ci }
       ci += 1
     }
@@ -2823,53 +2309,10 @@ object PipelineOps {
     * same heap kernel run within [[ivfAssignments]] cells.
     */
   def knnGraph(embeddings: DataFrame, k: Int, blocks: Int = 0): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val nb = if (blocks > 0) blocks else math.max(8, spark.sparkContext.defaultParallelism)
-    val packed = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        pmod(col("vec_id"), lit(nb)).cast("int").as("bid"))
-      .as[(Long, Array[Double], Int)]
-      .groupByKey(_._3)
-      .mapGroups { (bid, it) =>
-        packBlock(bid, it.map(t => (t._1, t._2)).toArray)
-      }
-    val cand = packed.as("a").joinWith(packed.as("b"), $"a.bid" <= $"b.bid", "inner")
-      .repartition(nb)
-      .flatMap { case (a, b) =>
-        val same = a.bid == b.bid
-        val dim = a.dim
-        def mkHeaps(n: Int) = Array.fill(n)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](WorstFirst))
-        val ha = mkHeaps(a.ids.length)
-        val hb = if (same) ha else mkHeaps(b.ids.length)
-        var i = 0
-        while (i < a.ids.length) {
-          var j = if (same) i + 1 else 0
-          while (j < b.ids.length) {
-            var dot = 0.0; var p = i * dim; var q = j * dim; var z = 0
-            while (z < dim) { dot += a.flat(p) * b.flat(q); p += 1; q += 1; z += 1 }
-            val cos = dot / (a.norms(i) * b.norms(j))
-            heapPush(ha(i), k, cos, b.ids(j))
-            heapPush(hb(j), k, cos, a.ids(i))
-            j += 1
-          }
-          i += 1
-        }
-        ha.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.iterator.map { case (c, id) => (a.ids(i), id, c) }
-        } ++ (if (same) Iterator.empty
-              else hb.iterator.zipWithIndex.flatMap { case (h, j) =>
-                h.iterator.map { case (c, id) => (b.ids(j), id, c) } })
-      }
-      .toDF("vec_id", "nb_id", "c")
-    cand
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("c").desc, col("nb_id"))))
-      .where(col("rank") <= k)
-      .select(col("vec_id"), col("nb_id"), round(col("c"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    import embeddings.sparkSession.implicits._
+    requirePositive("k" -> k)
+    rankCut(gridPairs(embeddings, blocks)((a, b) => topK(a, b, gridMode(a, b), both = true, k))
+      .toDF("vec_id", "nb_id", "c"), "vec_id", "nb_id", k)
   }
 
   /** Approximate kNN graph through IVF cells — the sub-quadratic 100 TB
@@ -2885,75 +2328,12 @@ object PipelineOps {
     */
   def knnGraphIvf(embeddings: DataFrame, k: Int, nCentroids: Int = 16,
       nprobe: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
+    import embeddings.sparkSession.implicits._
+    requirePositive("k" -> k, "nCentroids" -> nCentroids, "nprobe" -> nprobe)
     val (assigned, centers) = ivfAssignments(embeddings, nCentroids)
-    val bc = spark.sparkContext.broadcast(centers)
-    val e = embeddings.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    // member blocks: one packed VecBlock per cell
-    val members = e.join(assigned, "vec_id")
-      .select(col("cluster"), col("vec_id"), col("v"))
-      .as[(Int, Long, Array[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (cell, it) =>
-        packBlock(cell, it.map(t => (t._2, t._3)).toArray)
-      }
-    // probe rows: each vector fans out to its nprobe nearest cells
-    // (L2 over the normalized vector, the assignment metric)
-    val probes = e.as[(Long, Array[Double])].mapPartitions { it =>
-      val cs = bc.value
-      it.flatMap { case (id, v) =>
-        var s = 0.0; var j = 0
-        while (j < v.length) { s += v(j) * v(j); j += 1 }
-        val nrm = math.sqrt(s)
-        val nv = if (nrm > 0) v.map(_ / nrm) else v
-        val ds = Array.tabulate(cs.length) { c =>
-          val cc = cs(c)
-          var d = 0.0; var i = 0
-          while (i < nv.length) { val t = cc(i) - nv(i); d += t * t; i += 1 }
-          (d, c)
-        }
-        ds.sortBy(t => (t._1, t._2)).take(math.min(nprobe, cs.length))
-          .iterator.map { case (_, c) => (c, id, v) }
-      }
-    }.toDF("cluster", "vec_id", "v")
-      .as[(Int, Long, Array[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (cell, it) =>
-        packBlock(cell, it.map(t => (t._2, t._3)).toArray)
-      }
-    val cand = probes.as("p").joinWith(members.as("m"), $"p.bid" === $"m.bid", "inner")
-      .flatMap { case (p, m) =>
-        val dim = p.dim
-        val heaps = Array.fill(p.ids.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](WorstFirst))
-        var i = 0
-        while (i < p.ids.length) {
-          val h = heaps(i)
-          var j = 0
-          while (j < m.ids.length) {
-            if (m.ids(j) != p.ids(i)) {
-              var dot = 0.0; var a = i * dim; var b = j * dim; var z = 0
-              while (z < dim) { dot += p.flat(a) * m.flat(b); a += 1; b += 1; z += 1 }
-              heapPush(h, k, dot / (p.norms(i) * m.norms(j)), m.ids(j))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.iterator.map { case (c, id) => (p.ids(i), id, c) }
-        }
-      }
-      .toDF("vec_id", "nb_id", "c")
-    cand
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("c").desc, col("nb_id"))))
-      .where(col("rank") <= k)
-      .select(col("vec_id"), col("nb_id"), round(col("c"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    rankCut(probePairs(embeddings, assigned, centers, nprobe)(
+      (p, m) => topK(p, m, SkipSelf, both = false, k)).toDF("vec_id", "nb_id", "c"),
+      "vec_id", "nb_id", k)
   }
 
   /** Contrastive pair mining for embedding-model training — per anchor:
@@ -2989,9 +2369,8 @@ object PipelineOps {
       blocks: Int = 0, candidatePairs: Option[DataFrame] = None): DataFrame = {
     require(posLo <= posHi && negLo <= negHi && negHi <= posLo,
       "bands must be ordered: [negLo,negHi) below [posLo,posHi)")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    candidatePairs match {
+    import embeddings.sparkSession.implicits._
+    val cand = candidatePairs match {
       case Some(p) =>
         // symmetric expansion (each undirected candidate pair serves both
         // anchors), de-dup (a multi-probe source may emit a pair once per
@@ -3002,9 +2381,8 @@ object PipelineOps {
         val sym = p.select(col("ia").as("vec_id"), col("ib").as("pair_id"))
           .unionByName(p.select(col("ib").as("vec_id"), col("ia").as("pair_id")))
           .dropDuplicates(Seq("vec_id", "pair_id"))
-        val ev = embeddings.select(col("vec_id").cast("long").as("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        val banded = sym
+        val ev = vectors(embeddings)
+        sym
           .join(ev.select(col("vec_id"), col("v").as("va")), Seq("vec_id"))
           .join(ev.select(col("vec_id").as("pair_id"), col("v").as("vb")), Seq("pair_id"))
           .withColumn("c", cosineExpr(col("va"), col("vb")))
@@ -3012,67 +2390,20 @@ object PipelineOps {
             when(col("c") >= posLo && col("c") < posHi, "pos")
               .when(col("c") >= negLo && col("c") < negHi, "neg"))
           .where(col("kind").isNotNull)
-        return banded
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("vec_id"), col("kind"))
-              .orderBy(col("c").desc, col("pair_id"))))
-          .where((col("kind") === "pos" && col("rank") <= kPos) ||
-            (col("kind") === "neg" && col("rank") <= kNeg))
-          .select(col("vec_id"), col("pair_id"), round(col("c"), 4).as("cos"),
-            col("kind"), col("rank").cast("long").as("rank"))
-      case None => // fall through to the exact all-pairs kernel below
+      case None =>
+        // the exact all-pairs kernel: per row, heap slot 0 keeps the
+        // positives and slot 1 the hard negatives
+        gridPairs(embeddings, blocks) { (a, b) =>
+          val mode = gridMode(a, b)
+          val heaps = new TopHeaps(a, if (mode == Upper) a else b, Array(kPos, kNeg),
+            c => if (c >= posLo && c < posHi) 0 else if (c >= negLo && c < negHi) 1 else -1)
+          pairLoop(a, b, mode, heaps)
+          heaps.rows.map { case (id, pid, c, s) => (id, pid, c, if (s == 0) "pos" else "neg") }
+        }.toDF("vec_id", "pair_id", "c", "kind")
     }
-    val nb = if (blocks > 0) blocks else math.max(8, spark.sparkContext.defaultParallelism)
-    val packed = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        pmod(col("vec_id"), lit(nb)).cast("int").as("bid"))
-      .as[(Long, Array[Double], Int)]
-      .groupByKey(_._3)
-      .mapGroups { (bid, it) =>
-        packBlock(bid, it.map(t => (t._1, t._2)).toArray)
-      }
-    val cand = packed.as("a").joinWith(packed.as("b"), $"a.bid" <= $"b.bid", "inner")
-      .repartition(nb)
-      .flatMap { case (a, b) =>
-        val same = a.bid == b.bid
-        val dim = a.dim
-        def mkHeaps(n: Int) = Array.fill(2 * n)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](WorstFirst))
-        // heap layout: [2i] = positives of row i, [2i+1] = negatives
-        val ha = mkHeaps(a.ids.length)
-        val hb = if (same) ha else mkHeaps(b.ids.length)
-        def route(hs: Array[scala.collection.mutable.PriorityQueue[(Double, Long)]],
-            row: Int, cos: Double, id: Long): Unit = {
-          if (cos >= posLo && cos < posHi) heapPush(hs(2 * row), kPos, cos, id)
-          else if (cos >= negLo && cos < negHi) heapPush(hs(2 * row + 1), kNeg, cos, id)
-        }
-        var i = 0
-        while (i < a.ids.length) {
-          var j = if (same) i + 1 else 0
-          while (j < b.ids.length) {
-            var dot = 0.0; var p = i * dim; var q = j * dim; var z = 0
-            while (z < dim) { dot += a.flat(p) * b.flat(q); p += 1; q += 1; z += 1 }
-            val cos = dot / (a.norms(i) * b.norms(j))
-            route(ha, i, cos, b.ids(j))
-            route(hb, j, cos, a.ids(i))
-            j += 1
-          }
-          i += 1
-        }
-        def emit(hs: Array[scala.collection.mutable.PriorityQueue[(Double, Long)]],
-            ids: Array[Long]) =
-          hs.iterator.zipWithIndex.flatMap { case (h, slot) =>
-            val kind = if (slot % 2 == 0) "pos" else "neg"
-            h.iterator.map { case (c, id) => (ids(slot / 2), id, c, kind) }
-          }
-        emit(ha, a.ids) ++ (if (same) Iterator.empty else emit(hb, b.ids))
-      }
-      .toDF("vec_id", "pair_id", "c", "kind")
     cand
       .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id"), col("kind")).orderBy(col("c").desc, col("pair_id"))))
+        Window.partitionBy(col("vec_id"), col("kind")).orderBy(col("c").desc, col("pair_id"))))
       .where((col("kind") === "pos" && col("rank") <= kPos) ||
         (col("kind") === "neg" && col("rank") <= kNeg))
       .select(col("vec_id"), col("pair_id"), round(col("c"), 4).as("cos"),
@@ -3259,40 +2590,17 @@ object PipelineOps {
     val spark = corpus.sparkSession
     import spark.implicits._
     val bRows = bench.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+      .as[(Long, Array[Double])].collect()
     require(bRows.nonEmpty, "semanticContamination needs a non-empty benchmark")
-    val dim = bRows(0)._2.length
-    val m = bRows.length
-    val bIds = bRows.map(_._1)
-    val bFlat = new Array[Double](m * dim)
-    val bNorms = new Array[Double](m)
-    var bi = 0
-    while (bi < m) {
-      val v = bRows(bi)._2
-      var j = 0; var s = 0.0
-      while (j < dim) { val x = v(j); bFlat(bi * dim + j) = x; s += x * x; j += 1 }
-      bNorms(bi) = math.sqrt(s)
-      bi += 1
-    }
-    val bc = spark.sparkContext.broadcast((bIds, bFlat, bNorms))
+    val bc = spark.sparkContext.broadcast(packBlock(0, bRows))
     corpus.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
-        val (ids, bf, bn) = bc.value
+        val bs = bc.value
         it.map { case (vid, v) =>
-          var s = 0.0; var j = 0
-          while (j < dim) { val x = v(j); s += x * x; j += 1 }
-          val norm = math.sqrt(s)
-          var bestC = Double.NegativeInfinity; var bestId = 0L
-          var q = 0
-          while (q < ids.length) {
-            var dot = 0.0; var p = q * dim; var i = 0
-            while (i < dim) { dot += bf(p) * v(i); p += 1; i += 1 }
-            val cos = dot / (bn(q) * norm)
-            if (cos > bestC) { bestC = cos; bestId = ids(q) }
-            q += 1
-          }
-          (vid, bestId, bestC, bestC >= threshold)
+          val best = new MaxCos
+          pairLoop(bs, row(vid, v), AllPairs, best)
+          (vid, best.id, best.cos, best.cos >= threshold)
         }
       }
       .toDF(idCol, "bench_id", "c", "contaminated")

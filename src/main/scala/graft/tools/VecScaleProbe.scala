@@ -26,13 +26,15 @@ import graft.ops.PipelineOps
   *     per-task work.
   *
   * Usage: VecScaleProbe <cores> <mode> <src> [reps]
-  *   mode  = gates | timing
+  *   mode  = gates | timing | breakdown
   *   src   = noise:<embeddingsParquet> | clustered:<n>
   *   reps  = timing reps per op (default 2, best-of printed)
   * Timing mode times the three sub-quadratic kernels the VERDICT names
   * (embeddingNearDupPairsIvf, knnGraphIvf, semDedup-over-IVF) at this
   * JVM's parallelism; run once at 8 and once at 32 cores and divide for
   * the N-vs-4N efficiency (separate JVMs — Spark master is process-wide).
+  * Breakdown mode times one IVF near-dup pass in three steps: training
+  * (sample collect + driver Lloyd's), the assignment job, the full op.
   */
 object VecScaleProbe {
 

@@ -162,7 +162,7 @@ class RecallGateSpec extends AnyFunSuite {
         candidatePairs = Some(PipelineOps.embeddingNearDupPairsIvf(
           e, 0.1, nCentroids = 8, nprobe = 4)))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
-    // agreed pairs carry bit-identical 4dp cosines (shared packBlock fold)
+    // agreed pairs carry bit-identical 4dp cosines (shared VecBlocks fold)
     ivf.foreach { case (k, c) =>
       if (exact.contains(k)) assert(exact(k) == c, s"cos mismatch on $k")
     }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.PipelineOps
 
@@ -14,23 +14,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
 
-  /** Deterministic clustered embeddings (dim 64 like the driver's table):
-    * `nClusters` unit-ish centroids, each vector = centroid + seeded noise,
-    * so near-dup pairs above 0.35 and meaningful nearest neighbors exist.
-    */
-  private def genEmbeddings(n: Int, nClusters: Int = 12, noise: Double = 0.35): DataFrame = {
-    import spark.implicits._
-    val dim = 64
-    val rnd = new scala.util.Random(42)
-    val centroids = Array.fill(nClusters, dim)(rnd.nextGaussian())
-    val rows = (0L until n.toLong).map { i =>
-      val r = new scala.util.Random(1000 + i)
-      val c = centroids((i % nClusters).toInt)
-      val v = Array.tabulate(dim)(d => (c(d) + noise * r.nextGaussian()).toFloat)
-      (i, v.toSeq)
-    }
-    rows.toDF("vec_id", "embedding")
-  }
+  private def genEmbeddings(n: Int, nClusters: Int = 12, noise: Double = 0.35): DataFrame =
+    SimilaritySpec.genEmbeddings(spark, n, nClusters, noise)
 
   test("block-matrix near-dup kernel == expression-form cartesian (bit-exact)") {
     val e = genEmbeddings(300)
@@ -252,5 +237,27 @@ class SimilaritySpec extends AnyFunSuite {
     want.foreach { case (id, canon) =>
       assert(got(id) == ((canon, canon == id)), s"id=$id")
     }
+  }
+}
+
+object SimilaritySpec {
+
+  /** Deterministic clustered embeddings (dim 64 like the driver's table):
+    * `nClusters` unit-ish centroids, each vector = centroid + seeded noise,
+    * so near-dup pairs above 0.35 and meaningful nearest neighbors exist.
+    */
+  def genEmbeddings(spark: SparkSession, n: Int, nClusters: Int = 12,
+      noise: Double = 0.35): DataFrame = {
+    import spark.implicits._
+    val dim = 64
+    val rnd = new scala.util.Random(42)
+    val centroids = Array.fill(nClusters, dim)(rnd.nextGaussian())
+    val rows = (0L until n.toLong).map { i =>
+      val r = new scala.util.Random(1000 + i)
+      val c = centroids((i % nClusters).toInt)
+      val v = Array.tabulate(dim)(d => (c(d) + noise * r.nextGaussian()).toFloat)
+      (i, v.toSeq)
+    }
+    rows.toDF("vec_id", "embedding")
   }
 }

@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB correctness compare.
 
-Usage: python3 tools/check_oracle.py <verifyOutDir> <sfDir>
+Usage: python3 tools/check_oracle.py <verifyOutDir> <sfDir> [names]
 
 Reads each <verifyOutDir>/<name> parquet (Spark result), runs the matching
 oracle_sql.json query in DuckDB against the sfDir tables, and compares:
 row count, column names (sorted), and a hash of the sorted value matrix.
+`names` (comma-separated; default: $SPARK_GRAFT_QUERIES, the subset
+graft.Verify was asked to dump) limits the check to those rows.
 """
 import json
+import os
 import sys
 import duckdb
 import math
@@ -41,6 +44,13 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    names = sys.argv[3] if len(sys.argv) > 3 else os.environ.get("SPARK_GRAFT_QUERIES", "")
+    if names.strip():
+        wanted = {n.strip() for n in names.split(",") if n.strip()}
+        unknown = sorted(wanted - oracle.keys())
+        if unknown:
+            sys.exit(f"unknown query names: {', '.join(unknown)}")
+        oracle = {n: q for n, q in oracle.items() if n in wanted}
     npass = nfail = nmiss = 0
     for name, sql in sorted(oracle.items()):
         try:
