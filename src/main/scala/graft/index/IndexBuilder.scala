@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkConf, TaskContext}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
@@ -360,9 +360,9 @@ object IndexBuilder {
     // ~100x points) — the warning cannot fail a build, only record that
     // this heap/concurrency pairing measured degraded at scale.
     val maxSegTokens = if (metas.isEmpty) 0L else metas.map(_.totalTokens).max
-    val warnings = heapWarning(maxSegTokens,
-      math.min(spark.sparkContext.defaultParallelism, metas.size),
-      Runtime.getRuntime.maxMemory()).toSeq
+    val (heapBytes, concurrency) = taskHeap(spark.sparkContext.getConf,
+      Runtime.getRuntime.maxMemory(), spark.sparkContext.defaultParallelism, metas.size)
+    val warnings = heapWarning(maxSegTokens, concurrency, heapBytes).toSeq
 
     val manifest = IndexManifest(
       version = IndexManifest.FormatVersion,
@@ -386,6 +386,24 @@ object IndexBuilder {
     warnings.foreach(w => println(s"[graft-build WARN] $w"))
     IndexManifest.write(spark, indexDir, manifest)
     manifest
+  }
+
+  /** The heap of a JVM that runs build tasks and how many of them it runs
+    * at once (at most `segments`), for [[heapWarning]]: on a cluster with
+    * `spark.executor.cores` set, an executor's — `spark.executor.memory` of
+    * heap and `spark.executor.cores / spark.task.cpus` slots; otherwise (local
+    * mode, or executors that take all of a worker's cores, a count the conf
+    * does not hold) the driver's own heap and `defaultParallelism` slots.
+    */
+  private[graft] def taskHeap(conf: SparkConf, driverHeap: Long, defaultParallelism: Int,
+      segments: Int): (Long, Int) = {
+    val master = conf.get("spark.master", "local")
+    val local = master == "local" || master.startsWith("local[")
+    val (heap, slots) =
+      if (local || !conf.contains("spark.executor.cores")) (driverHeap, defaultParallelism)
+      else (conf.getSizeAsBytes("spark.executor.memory", "1g"),
+        conf.getInt("spark.executor.cores", 1) / conf.getInt("spark.task.cpus", 1))
+    (heap, math.min(slots, segments))
   }
 
   /** Derived heap-to-arena sizing rule (pure — ArenaGuardSpec pins it at

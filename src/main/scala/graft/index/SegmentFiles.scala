@@ -20,19 +20,26 @@ import org.apache.parquet.schema.{MessageType, PrimitiveComparator}
   * (`src/core/segment_reader.rs`), without a Spark job.
   *
   * A built segment is one file sorted by (field, term); a merged segment is
-  * several. A read projects the requested columns and pushes its
-  * [[SegmentFiles.Clause]]s down as one predicate on (field, term,
-  * docFreq), so row-group statistics and page column indexes skip what they
-  * can; the exact row test then runs on the raw (field, term, docFreq)
-  * values, and only the kept rows' other columns are decoded. Terms compare
-  * in UTF-8 byte order, as Parquet's binary statistics and Spark SQL do.
+  * several. A read compiles its [[SegmentFiles.Clause]]s into one
+  * predicate on (field, term, docFreq) and one exact row test on those raw
+  * values. Each file is served by its [[SegmentReader]], which decodes the
+  * file once per JVM and runs the row test over the decoded rows. A file
+  * the reader cache has no room for is read pruned instead: the read
+  * projects the requested columns and pushes the predicate down, so
+  * row-group statistics and page column indexes skip what they can; the row
+  * test then runs on the rows left, and only the kept rows' other columns
+  * are decoded. Either way a read returns the same rows in file order.
+  * Terms compare in UTF-8 byte order, as Parquet's binary statistics and
+  * Spark SQL do.
   *
   * Serializable: kernel tasks get their segment's file list in the closure.
   */
 final case class SegmentFiles(segment: Int, files: Seq[SegmentFiles.File]) {
   import SegmentFiles._
 
-  /** Streams the rows matching any of `clauses` to `f`, file by file. */
+  /** Streams the rows matching any of `clauses` to `f`, file by file, each
+    * file's rows in file order.
+    */
   def read(conf: Configuration, columns: Seq[String], clauses: Seq[Clause])(
       f: PostingRow => Unit): Unit = {
     val compiled = clauses.filter {
@@ -41,9 +48,13 @@ final case class SegmentFiles(segment: Int, files: Seq[SegmentFiles.File]) {
       case _ => true
     }.map(compile)
     if (compiled.nonEmpty) {
-      val pred = compiled.map(_._1).reduce(FilterApi.or)
       val tests = compiled.map(_._2).toArray
-      files.foreach(readFile(conf, _, columns, pred, (fb, tb, d) => tests.exists(_(fb, tb, d)))(f))
+      val pruned: Pruned =
+        (compiled.map(_._1).reduce(FilterApi.or), (fb, tb, d) => tests.exists(_(fb, tb, d)))
+      files.foreach { file =>
+        SegmentReader.of(file).read(conf, segment, columns, pruned)(f)
+        Counters.files.incrementAndGet()
+      }
     }
   }
 
@@ -58,43 +69,125 @@ final case class SegmentFiles(segment: Int, files: Seq[SegmentFiles.File]) {
     */
   def urls(conf: Configuration, docIds: Set[Int]): Map[Int, String] =
     rows(conf, DocColumns, Seq(Docs(docIds))).iterator.map(r => r.docFreq -> r.term).toMap
+}
 
-  private def readFile(conf: Configuration, file: File, columns: Seq[String],
-      pred: FilterPredicate, test: RowTest)(f: PostingRow => Unit): Unit = {
+object SegmentFiles {
+
+  /** One file of a listing. Segment files are immutable and uniquely named
+    * by their write job, so (path, length, modification time) identifies
+    * one; a file rewritten in place lists as a new one.
+    */
+  final case class File(path: String, length: Long, mtime: Long)
+
+  /** One disjunct of a read's row condition. */
+  sealed trait Clause extends Serializable
+  /** Rows of `field` whose term is one of `terms`. */
+  final case class Terms(field: String, terms: Set[String]) extends Clause
+  /** Rows of `field` whose term starts with `prefix`. */
+  final case class Prefix(field: String, prefix: String) extends Clause
+  /** Rows of `field` whose term lies within the bounds (UTF-8 order). */
+  final case class Range(field: String, lo: Option[String], hi: Option[String],
+      loInclusive: Boolean, hiInclusive: Boolean) extends Clause
+  /** Every row of `field` (norms rows, full dictionary walks). */
+  final case class AllOf(field: String) extends Clause
+  /** The `__doc__` rows of the given doc ids. */
+  final case class Docs(docIds: Set[Int]) extends Clause
+
+  /** The dictionary: term, doc freq and (norms rows) token totals. */
+  val DictColumns: Seq[String] = Seq("field", "term", "docFreq", "totalTf")
+  /** The postings blobs, decoded only for kernel reads. */
+  val BlobColumns: Seq[String] = Seq("postings", "skip", "positions")
+  /** Everything a kernel task scores from. */
+  val KernelColumns: Seq[String] = DictColumns ++ BlobColumns
+  val DocColumns: Seq[String] = Seq("field", "term", "docFreq")
+
+  /** Process-wide read counters: file reads (one per file per [[read]],
+    * from the cache or not), rows returned, bytes read (the reading
+    * thread's Hadoop file-system statistics), Parquet file opens (pruned
+    * reads and decodes), parts decoded into the [[SegmentReader]] cache, and
+    * the cache's resident size estimate. These reads bypass Spark's task
+    * input metrics, so a query's scan volume shows here.
+    */
+  object Counters {
+    val files, rows, bytes, opens, decodes, cachedBytes = new AtomicLong
+    def snapshot: Snapshot =
+      Snapshot(files.get, rows.get, bytes.get, opens.get, decodes.get, cachedBytes.get)
+  }
+
+  final case class Snapshot(files: Long, rows: Long, bytes: Long, opens: Long, decodes: Long,
+      cachedBytes: Long) {
+    /** The counts since `before`; `cachedBytes` stays this snapshot's level. */
+    def since(before: Snapshot): Snapshot =
+      Snapshot(files - before.files, rows - before.rows, bytes - before.bytes, opens - before.opens,
+        decodes - before.decodes, cachedBytes)
+  }
+
+  /** The files of each of `segments` under `indexDir/postings`, skipping
+    * `_`/`.`-prefixed names (commit markers, checksums) as Spark's file
+    * index does. A missing segment directory lists as no files.
+    */
+  def list(conf: Configuration, indexDir: String, segments: Seq[Int]): Seq[SegmentFiles] = {
+    val fs = new Path(indexDir).getFileSystem(conf)
+    segments.map { s =>
+      val dir = new Path(indexDir, s"postings/segment=$s")
+      val files = if (!fs.exists(dir)) Array.empty[FileStatus] else fs.listStatus(dir)
+      SegmentFiles(s, files.toSeq
+        .filter(st => st.isFile && !"_.".contains(st.getPath.getName.head))
+        .sortBy(_.getPath.getName)
+        .map(st => File(st.getPath.toString, st.getLen, st.getModificationTime)))
+    }
+  }
+
+  /** Opens `file` — with its `footer` when known, else reading it — for
+    * `body`, counting the open and the bytes read. `filter` lets row-group
+    * statistics and page column indexes drop what it cannot match;
+    * `FilterCompat.NOOP` reads every row group.
+    */
+  private[index] def withFile[T](conf: Configuration, file: File, footer: ParquetMetadata,
+      filter: FilterCompat.Filter)(body: ParquetFileReader => T): T = {
     val in = HadoopInputFile.fromStatus(
-      new FileStatus(file.length, false, 0, 0L, 0L, new Path(file.path)), conf)
+      new FileStatus(file.length, false, 0, 0L, file.mtime, new Path(file.path)), conf)
     // row groups and pages only: a segment file is one row group, which the
     // dictionary filter could drop only after decoding its whole term
     // dictionary, and Parquet's record filter compares every predicate leaf
     // with every record (an `in` list element by element)
-    val opts = HadoopReadOptions.builder(conf).withRecordFilter(FilterCompat.get(pred))
+    val opts = HadoopReadOptions.builder(conf).withRecordFilter(filter)
       .useDictionaryFilter(false).useRecordFilter(false).build()
     val bytes0 = threadBytesRead()
-    val reader = ParquetFileReader.open(in, footerOf(conf, file), opts, in.newStream())
-    try {
-      val schema = reader.getFileMetaData.getSchema
-      val projection = new MessageType(schema.getName,
-        schema.getFields.asScala.filter(t => columns.contains(t.getName)).asJava)
-      reader.setRequestedSchema(projection)
-      var pages = reader.readNextFilteredRowGroup()
-      while (pages != null) {
-        val store = new ColumnReadStoreImpl(pages, new IgnoreValues, projection,
-          reader.getFileMetaData.getCreatedBy)
-        val rows = readRowGroup(store, projection, pages.getRowCount.toInt, test)
-        rows.foreach(f)
-        Counters.rows.addAndGet(rows.length)
-        pages = reader.readNextFilteredRowGroup()
-      }
-    } finally reader.close()
-    Counters.files.incrementAndGet()
-    Counters.bytes.addAndGet(threadBytesRead() - bytes0)
+    val reader =
+      if (footer == null) ParquetFileReader.open(in, opts)
+      else ParquetFileReader.open(in, footer, opts, in.newStream())
+    Counters.opens.incrementAndGet()
+    try body(reader)
+    finally {
+      reader.close()
+      Counters.bytes.addAndGet(threadBytesRead() - bytes0)
+    }
+  }
+
+  /** Streams the rows of `reader`'s (filtered) row groups that pass `test`
+    * to `f`, projected to `columns`, in file order.
+    */
+  private[index] def decode(reader: ParquetFileReader, segment: Int, columns: Seq[String],
+      test: RowTest)(f: PostingRow => Unit): Unit = {
+    val schema = reader.getFileMetaData.getSchema
+    val projection = new MessageType(schema.getName,
+      schema.getFields.asScala.filter(t => columns.contains(t.getName)).asJava)
+    reader.setRequestedSchema(projection)
+    var pages = reader.readNextFilteredRowGroup()
+    while (pages != null) {
+      val store = new ColumnReadStoreImpl(pages, new IgnoreValues, projection,
+        reader.getFileMetaData.getCreatedBy)
+      readRowGroup(store, projection, pages.getRowCount.toInt, segment, test).foreach(f)
+      pages = reader.readNextFilteredRowGroup()
+    }
   }
 
   /** Two passes over a row group's column readers: (field, term, docFreq)
     * of every row through `test`, then the kept rows' remaining columns,
     * every other value skipped.
     */
-  private def readRowGroup(store: ColumnReadStoreImpl, schema: MessageType, n: Int,
+  private def readRowGroup(store: ColumnReadStoreImpl, schema: MessageType, n: Int, segment: Int,
       test: RowTest): Array[PostingRow] = {
     def column(name: String): Option[ColumnReader] =
       if (!schema.containsField(name)) None
@@ -126,80 +219,12 @@ final case class SegmentFiles(segment: Int, files: Seq[SegmentFiles.File]) {
       }
     val totalTf = values[java.lang.Long]("totalTf", _.getLong)
     val Seq(postings, skip, positions) =
-      Seq("postings", "skip", "positions").map(values[Array[Byte]](_, _.getBinary.getBytes))
+      BlobColumns.map(values[Array[Byte]](_, _.getBinary.getBytes))
     keys.result().zipWithIndex.map { case ((fld, term, d), k) =>
       PostingRow(segment, fld, term, d, Option(totalTf(k)).fold(0L)(_.longValue),
         postings(k), skip(k), positions(k))
     }
   }
-}
-
-object SegmentFiles {
-
-  final case class File(path: String, length: Long)
-
-  /** One disjunct of a read's row condition. */
-  sealed trait Clause extends Serializable
-  /** Rows of `field` whose term is one of `terms`. */
-  final case class Terms(field: String, terms: Set[String]) extends Clause
-  /** Rows of `field` whose term starts with `prefix`. */
-  final case class Prefix(field: String, prefix: String) extends Clause
-  /** Rows of `field` whose term lies within the bounds (UTF-8 order). */
-  final case class Range(field: String, lo: Option[String], hi: Option[String],
-      loInclusive: Boolean, hiInclusive: Boolean) extends Clause
-  /** Every row of `field` (norms rows, full dictionary walks). */
-  final case class AllOf(field: String) extends Clause
-  /** The `__doc__` rows of the given doc ids. */
-  final case class Docs(docIds: Set[Int]) extends Clause
-
-  /** The dictionary: term, doc freq and (norms rows) token totals. */
-  val DictColumns: Seq[String] = Seq("field", "term", "docFreq", "totalTf")
-  /** Everything a kernel task scores from. */
-  val KernelColumns: Seq[String] = DictColumns ++ Seq("postings", "skip", "positions")
-  val DocColumns: Seq[String] = Seq("field", "term", "docFreq")
-
-  /** Process-wide read counters: files opened, rows returned, bytes read
-    * (the reading thread's Hadoop file-system statistics). These reads
-    * bypass Spark's task input metrics, so a query's scan volume shows here.
-    */
-  object Counters {
-    val files, rows, bytes = new AtomicLong
-    def snapshot: (Long, Long, Long) = (files.get, rows.get, bytes.get)
-  }
-
-  /** The files of each of `segments` under `indexDir/postings`, skipping
-    * `_`/`.`-prefixed names (commit markers, checksums) as Spark's file
-    * index does. A missing segment directory lists as no files.
-    */
-  def list(conf: Configuration, indexDir: String, segments: Seq[Int]): Seq[SegmentFiles] = {
-    val fs = new Path(indexDir).getFileSystem(conf)
-    segments.map { s =>
-      val dir = new Path(indexDir, s"postings/segment=$s")
-      val files = if (!fs.exists(dir)) Array.empty[FileStatus] else fs.listStatus(dir)
-      SegmentFiles(s, files.toSeq
-        .filter(st => st.isFile && !"_.".contains(st.getPath.getName.head))
-        .sortBy(_.getPath.getName)
-        .map(st => File(st.getPath.toString, st.getLen)))
-    }
-  }
-
-  /** Footers of the files read in this JVM — the driver's, and in local
-    * mode the executors' too. Segment files are immutable and uniquely
-    * named by their write job, so (path, length) identifies one. Bounded:
-    * emptied when full.
-    */
-  private val footers = new java.util.concurrent.ConcurrentHashMap[File, ParquetMetadata]()
-
-  private def footerOf(conf: Configuration, file: File): ParquetMetadata =
-    Option(footers.get(file)).getOrElse {
-      val in = HadoopInputFile.fromStatus(
-        new FileStatus(file.length, false, 0, 0L, 0L, new Path(file.path)), conf)
-      val reader = ParquetFileReader.open(in)
-      val footer = try reader.getFooter finally reader.close()
-      if (footers.size >= 4096) footers.clear()
-      footers.put(file, footer)
-      footer
-    }
 
   /** UTF-8 byte order (= code point order) of two strings, without encoding
     * them: UTF-16 order differs only where a surrogate meets a char at or
@@ -221,7 +246,9 @@ object SegmentFiles {
       hi.forall { v => val c = compareUtf8(term, v); if (hiInc) c <= 0 else c < 0 }
 
   /** Exact test of one record's raw (field, term, docFreq) values. */
-  private type RowTest = (Binary, Binary, Int) => Boolean
+  private[index] type RowTest = (Binary, Binary, Int) => Boolean
+  /** A read's clauses as one pushed-down predicate and one row test. */
+  private[index] type Pruned = (FilterPredicate, RowTest)
 
   private val fieldCol = FilterApi.binaryColumn("field")
   private val termCol = FilterApi.binaryColumn("term")

@@ -27,10 +27,12 @@ import graft.index.SegmentFiles.{AllOf, Clause, Terms}
   *   3. driver: TopNComputer merge of each query's per-segment fruits
   *      (`merge_fruits`, O(segments × k) per query).
   *
-  * Every read is pruned: only query terms' rows (plus the one norms row per
-  * text field and segment) are ever read — the filter on the sorted `term`
-  * column is the FST lookup analog. The segment listing and footers are
-  * read lazily, at the first query, never by the constructor.
+  * Every read returns only the query terms' rows (plus the one norms row
+  * per text field and segment). Each segment file is decoded once per JVM
+  * by its `SegmentReader`, while the cache has room for it, so planning,
+  * kernel reads and url fetches after the first open no file.
+  * The segment listing is read lazily, at the first query, never by the
+  * constructor.
   */
 final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long] = None)
     extends Serializable {

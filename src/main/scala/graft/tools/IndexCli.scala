@@ -22,7 +22,8 @@ import graft.search.{Query, QueryParser, Searcher}
   *
   * Commands:
   *   build  <srcParquet> <indexDir> [numPartitions=32] [textCol=text] [keyCol=url] [analyzer=default]
-  *   search <indexDir> <query...>           (QueryParser syntax; top-10)
+  *   search <indexDir> [--stats] <query...> (QueryParser syntax; top-10;
+  *                                           --stats: segment-read counters)
   *   count  <indexDir> <query...>
   *   aggregate <indexDir> <query...> <aggJson>  (search + ES aggs, one request)
   *   merge  <indexDir> [maxFanIn=16]        (log-policy rounds until stable)
@@ -65,9 +66,19 @@ object IndexCli {
       }
     case "search" =>
       val dir = args(1)
-      val q = parse(spark, dir, args.drop(2).mkString(" "))
+      val stats = args.lift(2).contains("--stats")
+      val q = parse(spark, dir, args.drop(if (stats) 3 else 2).mkString(" "))
+      val before = SegmentFiles.Counters.snapshot
       new Searcher(spark, dir).topDocs(q, 10).foreach { h =>
         println(f"${h.rank}%3d  ${h.score}%10.4f  ${h.url}")
+      }
+      if (stats) {
+        // this call's segment reads: file reads, rows returned, bytes read,
+        // Parquet opens, parts decoded into the reader cache, and the
+        // cache's resident estimate
+        val d = SegmentFiles.Counters.snapshot.since(before)
+        println(s"stats: files=${d.files} rows=${d.rows} bytes=${d.bytes} opens=${d.opens} " +
+          s"decodes=${d.decodes} cachedBytes=${d.cachedBytes}")
       }
     case "count" =>
       val dir = args(1)
@@ -134,7 +145,8 @@ object IndexCli {
 
   private val usage: String =
     """usage: IndexCli build <srcParquet> <indexDir> [numPartitions] [textCol] [keyCol] [analyzer]
-      |       IndexCli search|count <indexDir> <query...>
+      |       IndexCli search <indexDir> [--stats] <query...>
+      |       IndexCli count <indexDir> <query...>
       |       IndexCli aggregate <indexDir> <query...> <aggJson>
       |       IndexCli merge <indexDir> [maxFanIn] [minNumSegments]
       |       IndexCli delete <indexDir> <field> <term>

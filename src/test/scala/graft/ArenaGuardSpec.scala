@@ -103,4 +103,32 @@ class ArenaGuardSpec extends AnyFunSuite {
     assert(IndexBuilder.heapWarning(12000000L, 4, 32L << 30).isEmpty)
     assert(IndexBuilder.heapWarning(0L, 4, 8L << 30).isEmpty)
   }
+
+  test("the advisory sizes heap per task in the JVM that runs the build tasks") {
+    // local mode: the driver's heap, its default parallelism, never more
+    // tasks than segments; executor settings do not apply
+    val local = new org.apache.spark.SparkConf(false).setMaster("local[8]")
+      .set("spark.executor.memory", "64g").set("spark.executor.cores", "2")
+    assert(IndexBuilder.taskHeap(local, 8L << 30, 8, 32) == ((8L << 30, 8)))
+    assert(IndexBuilder.taskHeap(local, 8L << 30, 8, 3) == ((8L << 30, 3)))
+    // cluster: an executor's heap, shared by executor.cores / task.cpus tasks
+    val cluster = new org.apache.spark.SparkConf(false).setMaster("yarn")
+      .set("spark.executor.memory", "16g").set("spark.executor.cores", "8").set("spark.task.cpus", "2")
+    assert(IndexBuilder.taskHeap(cluster, 64L << 30, 256, 32) == ((16L << 30, 4)))
+    // at the guard-1 arena, 4 GiB per executor task is inside the band; the
+    // driver's 64 GiB over 32 segments (2 GiB per task) would have advised
+    val (heap, conc) = IndexBuilder.taskHeap(cluster, 64L << 30, 256, 32)
+    assert(IndexBuilder.heapWarning(12000000L, conc, heap).isEmpty)
+    assert(IndexBuilder.heapWarning(12000000L, 32, 64L << 30).isDefined)
+    // and a small executor advises whatever the driver's heap
+    val small = cluster.clone.set("spark.executor.memory", "4g")
+    val (h2, c2) = IndexBuilder.taskHeap(small, 64L << 30, 256, 32)
+    assert(IndexBuilder.heapWarning(12000000L, c2, h2).isDefined)
+    // executors without spark.executor.cores take all of a worker's cores
+    // (standalone), a count the conf does not hold: the driver's numbers
+    val allCores = new org.apache.spark.SparkConf(false).setMaster("spark://host:7077")
+      .set("spark.executor.memory", "16g")
+    assert(IndexBuilder.taskHeap(allCores, 64L << 30, 256, 32) == ((64L << 30, 32)))
+    assert(IndexBuilder.taskHeap(allCores, 8L << 30, 16, 32) == ((8L << 30, 16)))
+  }
 }

@@ -37,6 +37,18 @@ class IndexCliSpec extends AnyFunSuite {
     val searched = capture("search", dir, "+alpha", "+beta")
     assert(searched.linesIterator.exists(_.contains("https://")))
 
+    // --stats prints this call's segment-read counters after the same hits;
+    // a repeated search is served by the readers the first one decoded
+    def withStats() = capture("search", dir, "--stats", "+alpha", "+beta").linesIterator.toSeq
+    def stat(lines: Seq[String], name: String) =
+      lines.last.split(' ').collectFirst { case kv if kv.startsWith(s"$name=") => kv.drop(name.length + 1).toLong }.get
+    val first = withStats()
+    assert(first.init == searched.linesIterator.toSeq && first.last.startsWith("stats: "))
+    assert(stat(first, "files") > 0 && stat(first, "rows") > 0 && stat(first, "cachedBytes") > 0)
+    val again = withStats()
+    assert(again.init == first.init)
+    assert(stat(again, "opens") == 0 && stat(again, "decodes") == 0 && stat(again, "files") == stat(first, "files"))
+
     val agg = capture("aggregate", dir, "alpha", """{"langs": {"terms": {"field": "lang"}}}""")
     assert(agg.contains("\"langs\"") && agg.contains("\"doc_count\""),
       s"unexpected aggregate output: $agg")
