@@ -513,11 +513,9 @@ object SparkEntry {
         .join(pieces, "doc_id")
     }),
     // BPE vocabulary TRAINING (Sennrich 2016): the first 3 learned merges
-    // with their pair counts; the oracle replays the full training loop
-    // maxBatch=8: the guarded batching is proven sequential-identical
-    // (BpeSpec fuzz, merge tuples incl. counts), so the driver row keeps
-    // its sequential oracle and gains the round batching for free
-    "q_bpe_train" -> ((s, d) => PipelineOps.bpeTrainDf(docs(s, d), 3, maxBatch = 8)),
+    // with their pair counts; the oracle replays the same sequential
+    // training loop, one merge per round
+    "q_bpe_train" -> ((s, d) => PipelineOps.bpeTrainDf(docs(s, d), 3)),
     // quality-classifier inference: weight table derived deterministically
     // from the corpus vocabulary (w = tokhash % 2001 - 1000) so the oracle
     // can rebuild the exact same model; integer-exact linear score + bias

@@ -289,14 +289,14 @@ object IndexBuilder {
     val bcDone = spark.sparkContext.broadcast(done)
     val bcBase = spark.sparkContext.broadcast(segmentBase)
 
-    // ONE job, one pass: postings + doc-map + norms + stats rows, one sorted
-    // Parquet per segment. The per-segment stats ride out of the same job on
-    // an accumulator (updates reach the driver only from SUCCESSFUL tasks, so
+    // ONE job, one pass: postings + doc-map + norms, one sorted Parquet per
+    // segment. The per-segment stats ride out of the same job on an
+    // accumulator (updates reach the driver only from SUCCESSFUL tasks, so
     // entries correspond 1:1 with committed task output; speculative twins
-    // dedupe by segment id) — no second job re-listing and re-scanning the
-    // index just to read back the manifest rows it just wrote.
+    // dedupe by segment id) and are kept only in the manifest, as the
+    // reference keeps them only in `meta.json`.
     val statsAcc = spark.sparkContext
-      .collectionAccumulator[(Int, Int, Long, String)]("graft.segmentStats")
+      .collectionAccumulator[SegStats]("graft.segmentStats")
     val postings = parted.mapPartitions { it =>
       val cfg = bcCfg.value
       val pid = TaskContext.getPartitionId()
@@ -311,11 +311,10 @@ object IndexBuilder {
             "(raise numPartitions or maxDocsPerSegment/arenaBandDocs)")
         val segId = bcBase.value + pid * ChunksPerPartition + ci
         if (bcDone.value.contains(segId)) Iterator.empty
-        else buildSegment(segId, chunk, cfg).map { row =>
-          if (row.field == PostingRow.StatsField)
-            statsAcc.add((row.segment, row.docFreq, row.totalTf,
-              new String(row.postings, java.nio.charset.StandardCharsets.UTF_8)))
-          row
+        else {
+          val (rows, stats) = buildSegment(segId, chunk, cfg)
+          statsAcc.add(stats)
+          rows
         }
       }
     }
@@ -329,20 +328,16 @@ object IndexBuilder {
     val newCommitSeq = prior.map(_.commitSeq + 1).getOrElse(1L)
     val priorSegs: Seq[SegmentMeta] = prior.map(_.segments).getOrElse(Nil)
     import scala.jdk.CollectionConverters._
-    val fresh = statsAcc.value.asScala.toSeq
-      .sortBy { case (seg, _, _, extra) => (seg, extra) }
-      .distinctBy(_._1)
-      .map { case (segment, numDocs, totalTokens, extraStr) =>
-        val extra = extraStr.split(',').map(_.split(':')).map(a => a(0) -> a(1).toLong).toMap
+    val fresh = statsAcc.value.asScala.toSeq.sorted.distinctBy(_._1)
+      .map { case (segment, numDocs, totalTokens, buildMillis, postingsBytes) =>
         SegmentMeta(
           segment = segment,
           numDocs = numDocs,
           totalTokens = totalTokens,
-          postingsBytes = extra.getOrElse("postingsBytes", 0L),
-          buildMillis = extra.getOrElse("buildMillis", 0L),
-          docsPerSec = if (extra.getOrElse("buildMillis", 0L) > 0)
-            numDocs.toDouble * 1000.0 / extra("buildMillis") else 0.0,
-          mergeFanIn = extra.getOrElse("mergeFanIn", 1L).toInt,
+          postingsBytes = postingsBytes,
+          buildMillis = buildMillis,
+          docsPerSec = numDocs.toDouble * 1000.0 / buildMillis,
+          mergeFanIn = 1,
           // opstamp: segments published by THIS commit are stamped with it
           // (deletes recorded earlier do not apply to them)
           createdSeq = newCommitSeq)
@@ -382,7 +377,8 @@ object IndexBuilder {
       textAnalyzer = cfg.textAnalyzer,
       textFields = cfg.textFields,
       textFieldAnalyzers = cfg.textFieldAnalyzers,
-      warnings = warnings)
+      warnings = warnings,
+      compression = cfg.compression)
     warnings.foreach(w => println(s"[graft-build WARN] $w"))
     IndexManifest.write(spark, indexDir, manifest)
     manifest
@@ -480,11 +476,18 @@ object IndexBuilder {
     def toArray: Array[Int] = java.util.Arrays.copyOf(arr, len)
   }
 
+  /** (segment, numDocs, totalTokens, buildMillis, postingsBytes) of one
+    * built segment, the manifest's [[SegmentMeta]] numbers.
+    */
+  private type SegStats = (Int, Int, Long, Long, Long)
+
   /** One segment: the in-RAM term->postings recorder of the reference
     * (`src/postings/postings_writer.rs:59-90`) as a partition-local hash map,
-    * then term-sorted encode — no shuffle inside a segment build.
+    * then term-sorted encode — no shuffle inside a segment build. Returns
+    * its rows and its manifest numbers.
     */
-  private def buildSegment(segId: Int, docs: Seq[InDoc], cfg: IndexConfig): Iterator[PostingRow] = {
+  private def buildSegment(segId: Int, docs: Seq[InDoc],
+      cfg: IndexConfig): (Iterator[PostingRow], SegStats) = {
     val t0 = System.currentTimeMillis()
     val numDocs = docs.length
     val norms = new Array[Byte](numDocs)
@@ -711,11 +714,8 @@ object IndexBuilder {
       PostingRow(segId, PostingRow.NormsField, f, numDocs, extraTokens.getOrElse(f, 0L),
         extraNorms(f), Array.emptyByteArray, Array.emptyByteArray)
     }
-    val statsJson = s"buildMillis:${math.max(t1 - t0, 1)},postingsBytes:$postingsBytes,mergeFanIn:1"
-    val statsRow = PostingRow(segId, PostingRow.StatsField, "",
-      numDocs, totalTokens, statsJson.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      Array.emptyByteArray, Array.emptyByteArray)
-    body.iterator ++ Iterator(normsRow) ++ extraNormsRows.iterator ++ Iterator(statsRow)
+    (body.iterator ++ Iterator(normsRow) ++ extraNormsRows.iterator,
+      (segId, numDocs, totalTokens, math.max(t1 - t0, 1), postingsBytes))
   }
 
   private def cleanUnfinished(spark: SparkSession, indexDir: String, done: Set[Int],

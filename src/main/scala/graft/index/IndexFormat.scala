@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 /** One row of a segment's postings table — the on-disk unit of the inverted
   * index. The whole segment (term dictionary + postings + skip + positions +
-  * fieldnorms + stats) lives in ONE Parquet table sorted by (field, term):
+  * fieldnorms) lives in ONE Parquet table sorted by (field, term):
   * Parquet min/max column statistics over the sorted `term` column play the
   * role of the reference's FST prefix pruning (`/root/reference/src/termdict/
   * fst_termdict/termdict.rs:24,118` — SURVEY.md §2.1 "sorted-by-term Parquet").
@@ -14,8 +14,9 @@ import java.sql.Timestamp
   *    segment's fieldnorm bytes (1 byte/doc, docId-indexed — the reference's
   *    fieldnorm file, ARCHITECTURE.md:257-260); docFreq = numDocs;
   *    totalTf = total token count of the field in this segment.
-  *  - `field == "__stats__"`, `term == ""`: segment build metrics
-  *    (postings stored empty; numbers in docFreq/totalTf/postings JSON).
+  *  - `field == "__stats__"`, `term == ""`: segment build metrics, written
+  *    only by builds before the manifest became their one home; readers
+  *    skip these rows.
   */
 final case class PostingRow(
     segment: Int,
@@ -151,7 +152,12 @@ final case class IndexManifest(
       * heap-to-arena sizing check — see IndexBuilder's manifest assembly.
       * Absent in pre-v8 manifests; json4s fills the default.
       */
-    warnings: Seq[String] = Nil) {
+    warnings: Seq[String] = Nil,
+    /** Parquet codec of the segment files (`IndexConfig.compression`);
+      * merges write their segments with it. Manifests written before it
+      * was recorded read as snappy, the codec their merges used.
+      */
+    compression: String = "snappy") {
   def totalDocs: Long = segments.map(_.numDocs.toLong).sum
   def totalTokens: Long = segments.map(_.totalTokens).sum
   def segmentIds: Seq[Int] = segments.map(_.segment)

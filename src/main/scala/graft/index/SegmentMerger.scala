@@ -101,7 +101,6 @@ object SegmentMerger {
     */
   def mergeUntilStable(spark: SparkSession, indexDir: String,
       policy: LogMergePolicy = LogMergePolicy(),
-      compression: String = "snappy",
       keepOld: Boolean = false): IndexManifest = {
     var m = IndexManifest.read(spark, indexDir)
       .getOrElse(throw new IllegalStateException(s"no manifest at $indexDir"))
@@ -114,7 +113,7 @@ object SegmentMerger {
         .map { case (s, dead) => s -> dead.length }
     var groups = planLog(m, policy, deadCounts(m))
     while (groups.nonEmpty) {
-      m = merge(spark, indexDir, groups, keepOld = keepOld, compression = compression)
+      m = merge(spark, indexDir, groups, keepOld = keepOld)
       groups = planLog(m, policy, deadCounts(m))
     }
     m
@@ -133,15 +132,15 @@ object SegmentMerger {
     * eagerly, which is safe only when no reader spans the commit.
     */
   def merge(spark: SparkSession, indexDir: String, groups: Seq[MergeGroup],
-      keepOld: Boolean = false, compression: String = "snappy"): IndexManifest =
+      keepOld: Boolean = false): IndexManifest =
     // single writer per index dir (INDEX_WRITER_LOCK): the publish below is
     // a manifest read-modify-write
     WriterLock.withLock(spark, indexDir) {
-      mergeLocked(spark, indexDir, groups, keepOld, compression)
+      mergeLocked(spark, indexDir, groups, keepOld)
     }
 
   private def mergeLocked(spark: SparkSession, indexDir: String, groups: Seq[MergeGroup],
-      keepOld: Boolean, compression: String): IndexManifest = {
+      keepOld: Boolean): IndexManifest = {
     import spark.implicits._
     val manifest = IndexManifest.read(spark, indexDir)
       .getOrElse(throw new IllegalStateException(s"no manifest at $indexDir"))
@@ -183,6 +182,8 @@ object SegmentMerger {
       if (fs.exists(pth)) fs.delete(pth, true)
     }
 
+    // segments built before the manifest held their metrics carry a
+    // `__stats__` row; it is not carried into the merged segment
     val postings = spark.read.parquet(s"$indexDir/postings")
       .where(col("segment").isin(oldSegs: _*) && col("field") =!= PostingRow.StatsField)
       .as[PostingRow]
@@ -276,7 +277,7 @@ object SegmentMerger {
         }
       }
     merged.toDF().write.mode("append").partitionBy("segment")
-      .option("compression", compression).parquet(s"$indexDir/postings")
+      .option("compression", manifest.compression).parquet(s"$indexDir/postings")
 
     // purged segments: exact alive token totals from the merged postings
     // (total tokens == sum of term tfs), one pruned aggregate
@@ -289,7 +290,6 @@ object SegmentMerger {
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
     val newCommitSeq = manifest.commitSeq + 1
-    // stats rows for merged segments (so manifest reassembly keeps working)
     val newMetas = groups.map { g =>
       val olds = g.oldSegments.map(byId)
       SegmentMeta(
@@ -302,14 +302,6 @@ object SegmentMerger {
         mergeFanIn = g.oldSegments.size,
         createdSeq = newCommitSeq)
     }
-    val statsRows = newMetas.map { m =>
-      val json = s"buildMillis:${m.buildMillis},postingsBytes:${m.postingsBytes},mergeFanIn:${m.mergeFanIn}"
-      PostingRow(m.segment, PostingRow.StatsField, "", m.numDocs, m.totalTokens,
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        Array.emptyByteArray, Array.emptyByteArray)
-    }
-    statsRows.toDS().toDF().write.mode("append").partitionBy("segment")
-      .option("compression", compression).parquet(s"$indexDir/postings")
 
     val untouched = manifest.segments.filterNot(m => mapping.contains(m.segment))
     val outSegments = (untouched ++ newMetas).sortBy(_.segment)

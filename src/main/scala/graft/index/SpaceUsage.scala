@@ -92,7 +92,7 @@ object SpaceUsage {
         val fast = r.getLong(6)
         field match {
           case PostingRow.NormsField => norms += postings
-          case PostingRow.StatsField => ()
+          case PostingRow.StatsField => () // older builds' metrics row
           case PostingRow.DocField => store += termdict + fast
           case f => fields += FieldUsage(f, numTerms, termdict, postings, positions)
         }

@@ -641,25 +641,22 @@ object PipelineOps {
     val codes = pqEncode(embeddings, books)
     val bcLut = spark.sparkContext.broadcast(adcTable(books, unitQuery(embeddings, queryVecId)))
     val kCent = books(0).length
-    // the query row itself stays in: cosineTopK both needs it (query
-    // lookup) and excludes it from results
     adcRerank(embeddings, codes.as[(Long, Array[Byte])].mapPartitions { it =>
       val l = bcLut.value
-      adcScan(it.map { case (id, code) => (id, code, l) }, kCent, rerank)
+      adcScan(it.map { case (id, code) => (id, code, l) }, kCent, rerank, queryVecId)
     }, queryVecId, k, rerank)
   }
 
   /** Exact re-rank of an ADC scan's survivors: the `rerank` lowest
-    * (adc, vec_id) rows plus the query row, scored by [[cosineTopK]].
+    * (adc, vec_id) non-query rows plus the query row, scored by
+    * [[cosineTopK]], which needs the query row and leaves it out of the
+    * results.
     */
   private def adcRerank(embeddings: DataFrame, scanned: Dataset[(Double, Long)],
       queryVecId: Long, k: Int, rerank: Int): DataFrame = {
     val cands = scanned.toDF("adc", "vec_id")
       .orderBy(col("adc").asc, col("vec_id")).limit(rerank).select("vec_id")
-      // the query row is guaranteed present (ADC self-distance is the
-      // quantization floor, but union is cheap insurance for tiny rerank)
       .union(embeddings.sparkSession.range(1).select(lit(queryVecId).cast("long").as("vec_id")))
-      .distinct()
     cosineTopK(embeddings.join(cands, "vec_id"), queryVecId, k)
   }
 
@@ -715,7 +712,8 @@ object PipelineOps {
     adcRerank(embeddings, codes.where(col("cluster").isin(probes.toIndexedSeq: _*))
       .as[(Long, Int, Array[Byte])].mapPartitions { it =>
         val ls = bcLuts.value
-        adcScan(it.map { case (id, cell, code) => (id, code, ls(cell)) }, kCent, rerank)
+        adcScan(it.map { case (id, cell, code) => (id, code, ls(cell)) }, kCent, rerank,
+          queryVecId)
       }, queryVecId, k, rerank)
   }
 
@@ -1770,177 +1768,52 @@ object PipelineOps {
     * centroid training. Real pipelines additionally bound the word frame
     * by training on a sample; pass a pre-sampled `docs` for that.
     *
-    * `maxBatch > 1` accepts SEVERAL merges per driver round — the
-    * large-vocabulary (32k-merge) latency fix — while staying EXACTLY
-    * sequential-equivalent (BpeSpec fuzzes batched == single, counts
-    * included). A candidate prefix of the round's (count desc, p, c)
-    * ranking is accepted while provably nothing the earlier accepted
-    * merges do can change what sequential BPE would pick next:
-    *   1. symbols pairwise disjoint, and no candidate symbol equals an
-    *      earlier accepted pair's concatenation (so no accepted pair's
-    *      own count is destroyed OR boosted, and the one-pass rewrite
-    *      cannot chain rules);
-    *   2. no duplicate concatenations (two same-round merges conflating
-    *      into one new symbol would sum their boosts);
-    *   3. the candidate's count strictly beats every earlier accepted
-    *      pair's creation cap — the max count any pair involving that
-    *      merge's new symbol can reach, bounded from the snapshot as
-    *      min(maxIn(p), n) on the left (resp. min(maxOut(c), n) on the
-    *      right): a created adjacency (y, X) needs y immediately before
-    *      an occurrence of "p c", so it inherits at most
-    *      min(count(y,p), count(p,c)) occurrences; the self-pair (X,X)
-    *      needs "p c p c", whose middle adjacency (c,p) bounds it by the
-    *      same left cap.
-    *   4. when the candidate's concatenation ALREADY exists as a symbol S
-    *      in the snapshot (maxIn(cc) > 0 or maxOut(cc) > 0), the merged
-    *      symbol conflates with S and a created pair can sum several
-    *      routes, so the per-side caps of rule 3 are not sound alone; the
-    *      creation cap widens to the route-enumeration bound
-    *      max(selfCap, rbFull) with
-    *        selfCap = maxIn(cc) + min(maxIn(p), n) + min(2·maxOut(c), n)
-    *        rbFull  = maxOut(cc) + min(maxOut(c), n)
-    *      — (X,X) decomposes into (S,S) ≤ maxIn(cc); (S, merged) from an
-    *      old (S,p) adjacency ≤ min(maxIn(p), n); and (merged, S) +
-    *      (merged, merged) from old (c,S)/(c,p) adjacencies, each
-    *      ≤ maxOut(c) and jointly ≤ n because each merged occurrence has
-    *      exactly one right neighbor; a non-self (y,X) is ≤
-    *      maxIn(cc) + min(maxIn(p), n) ≤ selfCap, and (X,y) is ≤ rbFull.
-    *      (The pure-merged self pair needs "p c p c", whose middle (c,p)
-    *      adjacency keeps the un-conflated case inside rule 3's caps.)
-    * The round stops at the FIRST rejected candidate (prefix rule — a
-    * skipped pair could be the one sequential would pick). Zipfian pair
-    * tables batch 2-8 merges per round in practice; worst case degrades
-    * to maxBatch=1 behavior.
+    * One merge per round: BENCH.md's "BPE fair chance" row measured
+    * accepting several provably-sequential merges per round on a
+    * pair-job-dominated 1.1M-word table, and it saved too few rounds to
+    * pay for itself.
     */
-  def bpeTrain(docs: DataFrame, numMerges: Int,
-      maxBatch: Int = 1,
-      /** observability hook: called once per driver round with the number
-        * of merges that round accepted (BpeProbe's merges/round metric) —
-        * never affects the result
-        */
-      onRound: Int => Unit = _ => ()): Seq[(String, String, Long)] = {
+  def bpeTrain(docs: DataFrame, numMerges: Int): Seq[(String, String, Long)] = {
     val words = withTokens(docs)
       .select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(concat_ws(" ", expr("filter(split(w, ''), x -> x <> '')")).as("syms"),
         col("cnt"))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    // lazy checkpoints: each round's top-pair collect is the ONE action —
-    // in BOTH modes: the batched round's caps derive from the SAME
-    // collect (top-M, below), never from a second stats job
+    // lazy checkpoints: each round's top-pair collect is the ONE action
     var cur = words.localCheckpoint(eager = false)
     var exhausted = false
-    // Cap stats ride the one collect: a symbol's max-in/max-out pair
-    // count is EXACT when the symbol appears on that side within the
-    // top-M rows (any higher-count pair would rank above the M-th), and
-    // otherwise upper-bounded by the M-th count — upper bounds keep the
-    // acceptance rule sound (a looser cap only rejects more). M = 256
-    // keeps the collect driver-tiny while making the floor bound small
-    // enough to batch against on Zipfian pair tables.
-    val statsTopM = 256
     while (merges.size < numMerges && !exhausted) {
-      val want = math.min(math.max(1, maxBatch), numMerges - merges.size)
-      val fetch = if (want > 1) math.max(want, statsTopM) else 1
-      val pairsDf = cur
+      val top = cur
         .select(col("cnt"), explode(expr(
           "transform(slice(split(syms, ' '), 1, size(split(syms, ' ')) - 1)," +
             " (x, i) -> struct(x AS p, element_at(split(syms, ' '), i + 2) AS c))")).as("pr"))
         .groupBy(col("pr.p").as("p"), col("pr.c").as("c"))
         .agg(sum("cnt").as("n"))
-      val top = pairsDf
         .orderBy(col("n").desc, col("p"), col("c"))
-        .limit(fetch).collect()
+        .limit(1).collect()
       if (top.isEmpty) exhausted = true // every word fully merged
       else {
-        val rows = top.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val cands = rows.take(want)
-        val accepted: Seq[(String, String, Long)] =
-          if (cands.length == 1) cands.toSeq
-          else {
-            // floor = 0 when the whole table fit in the fetch (absent
-            // symbol truly has no pair), else the M-th count upper-bounds
-            // any pair not collected
-            val floor = if (rows.length < fetch) 0L else rows.last._3
-            val maxIn = rows.groupBy(_._2).map { case (s, v) => s -> v.map(_._3).max }
-            val maxOut = rows.groupBy(_._1).map { case (s, v) => s -> v.map(_._3).max }
-            bpeAcceptBatch(cands.toSeq, maxIn, maxOut, floor)
-          }
-        merges ++= accepted
-        onRound(accepted.size)
+        val (p, c) = (top(0).getString(0), top(0).getString(1))
+        merges += ((p, c, top(0).getLong(2)))
         val sy = split(col("syms"), " ")
         cur = cur.withColumn("syms",
           aggregate(slice(sy, lit(2), greatest(size(sy) - 1, lit(0))),
             element_at(sy, 1),
-            (acc0, x) => {
-              // one rewrite pass applies every accepted rule; disjointness
-              // guarantees at most one branch can match at any position
-              // and no rule consumes another's output within the pass
-              val fallback = concat(acc0, lit(" "), x)
-              accepted.foldRight(fallback) { case ((p, c, _), els) =>
-                when(x === lit(c) && (acc0 === lit(p) || acc0.endsWith(lit(" " + p))),
-                  concat(acc0, lit(c))).otherwise(els)
-              }
-            }))
+            (acc0, x) =>
+              when(x === lit(c) && (acc0 === lit(p) || acc0.endsWith(lit(" " + p))),
+                concat(acc0, lit(c))).otherwise(concat(acc0, lit(" "), x))))
           .localCheckpoint(eager = false)
       }
     }
     merges.toSeq
   }
 
-  /** Batch-acceptance rule for [[bpeTrain]] (Scaladoc rules 1-4 there):
-    * returns the provably sequential-equivalent PREFIX of one round's
-    * ranked candidates, given snapshot per-symbol pair-count caps
-    * (`maxIn(s)` = max count of any pair (·,s), `maxOut(s)` = max count of
-    * (s,·)). The maps may be derived from only the TOP-M pairs of the
-    * snapshot; `floor` then upper-bounds any symbol absent from them (the
-    * M-th pair's count — any larger pair would have ranked inside).
-    * UPPER bounds keep the rule sound: a looser cap can only shorten the
-    * accepted prefix, never change a merge. Pure — package-private so
-    * BpeSpec can fuzz the rule itself at volume (adversarial
-    * tie/cascade/conflation corpora) without a Spark round per trial;
-    * [[bpeTrain]] is the only production caller.
-    */
-  private[graft] def bpeAcceptBatch(cands: Seq[(String, String, Long)],
-      maxIn: Map[String, Long],
-      maxOut: Map[String, Long],
-      floor: Long = 0L): Seq[(String, String, Long)] = {
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    val usedSyms = scala.collection.mutable.Set.empty[String]
-    val usedConcats = scala.collection.mutable.Set.empty[String]
-    var capMax = Long.MinValue
-    var stopped = false
-    for (cand <- cands if !stopped) {
-      val (p, c, n) = cand
-      val cc = p + c
-      val ok = acc.isEmpty || (
-        !usedSyms(p) && !usedSyms(c) && !usedConcats(p) && !usedConcats(c) &&
-          !usedConcats(cc) && !usedSyms(cc) && n > capMax)
-      if (ok) {
-        acc += cand
-        usedSyms += p; usedSyms += c; usedConcats += cc
-        val lb = math.min(maxIn.getOrElse(p, floor), n)
-        val rb = math.min(maxOut.getOrElse(c, floor), n)
-        val inCC = maxIn.getOrElse(cc, floor)
-        val outCC = maxOut.getOrElse(cc, floor)
-        val cap =
-          if (inCC == 0L && outCC == 0L) math.max(lb, rb) // rule 3
-          else { // rule 4: conflation with a pre-existing symbol S == cc
-            val selfCap = inCC + lb + math.min(2L * maxOut.getOrElse(c, floor), n)
-            val rbFull = outCC + rb
-            math.max(selfCap, rbFull)
-          }
-        capMax = math.max(capMax, cap)
-      } else stopped = true // prefix rule: never skip a candidate
-    }
-    acc.toSeq
-  }
-
   /** [[bpeTrain]] as a (rank, p, c, pair_count) DataFrame. */
-  def bpeTrainDf(docs: DataFrame, numMerges: Int,
-      maxBatch: Int = 1): DataFrame = {
+  def bpeTrainDf(docs: DataFrame, numMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeTrain(docs, numMerges, maxBatch).zipWithIndex
+    bpeTrain(docs, numMerges).zipWithIndex
       .map { case ((p, c, n), i) => (i + 1L, p, c, n) }
       .toDF("rank", "p", "c", "pair_count")
   }

@@ -414,18 +414,18 @@ private[ops] object VecBlocks {
 
   /** ADC scan of (vec_id, code, lookup table) rows: the `rerank` rows with
     * the lowest summed table distance, as (distance, vec_id), in a bounded
-    * max-heap.
+    * max-heap. The query's own row is skipped, so it takes no heap slot.
     */
   def adcScan(rows: Iterator[(Long, Array[Byte], Array[Double])], kCent: Int,
-      rerank: Int): Iterator[(Double, Long)] = {
+      rerank: Int, queryId: Long): Iterator[(Double, Long)] = {
     val heap = new PriorityQueue[(Double, Long)]()(Ordering.by[(Double, Long), Double](_._1))
-    rows.foreach { case (id, code, l) =>
+    rows.foreach { case (id, code, l) => if (id != queryId) {
       var s = 0.0
       var j = 0
       while (j < code.length) { s += l(j * kCent + (code(j) & 0xff)); j += 1 }
       if (heap.size < rerank) heap.enqueue((s, id))
       else if (s < heap.head._1) { heap.dequeue(); heap.enqueue((s, id)) }
-    }
+    }}
     heap.iterator
   }
 }

@@ -149,130 +149,47 @@ class BpeSpec extends AnyFunSuite {
     assert(pieces < raw) // merges shrink the token budget
   }
 
+  /** Spark `bpeTrain` == the naive trainer on one corpus of words. */
+  private def checkTrain(words: Seq[String], k: Int, tag: String): Unit = {
+    val docs = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
+    val wc = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(PipelineOps.bpeTrain(docs, k) == naiveTrain(wc, k), s"$tag k=$k words=$words")
+  }
+
   test("bpeTrain fuzz: random small-alphabet corpora match the naive trainer") {
     val rnd = new scala.util.Random(20260820)
     for (trial <- 0 until 8) {
       val words = (0 until 12).map { _ =>
         (1 to (1 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
       }
-      val docs = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
-      val wc = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val want = naiveTrain(wc, 6)
-      val got = PipelineOps.bpeTrain(docs, 6)
-      assert(got == want, s"trial=$trial words=$words")
+      checkTrain(words, 6, s"trial=$trial")
     }
   }
 
-  test("batched bpeTrain is EXACTLY sequential (merges, order, counts) and saves rounds") {
-    // the guarded prefix batching must never deviate from the Sennrich
-    // sequence — same merge tuples INCLUDING pair counts — on any corpus;
-    // fuzz over wider alphabets (more disjoint top pairs -> real batches)
+  test("bpeTrain fuzz: wider alphabets (3-7 letters) match the naive trainer") {
     val rnd = new scala.util.Random(20260821)
     for (trial <- 0 until 10) {
       val alpha = 3 + rnd.nextInt(5)
       val words = (0 until 20).map { _ =>
         (1 to (2 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(alpha)).toChar).mkString
       }
-      val docs = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
-      val wc = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val want = naiveTrain(wc, 10)
-      val got = PipelineOps.bpeTrain(docs, 10, maxBatch = 8)
-      assert(got == want, s"trial=$trial alpha=$alpha words=$words")
+      checkTrain(words, 10, s"trial=$trial alpha=$alpha")
     }
-    // on prose-like text the batch actually engages: merge table identical
-    // AND (documented latency property) fewer driver rounds than merges.
-    // Rounds are not directly observable, so pin the equality on the
-    // fixture the sequential test uses + a wide-alphabet corpus where the
-    // top pairs are symbol-disjoint
-    val docs = Seq(
-      (1L, "the the the then there other"),
-      (2L, "thin myth math the"),
-      (3L, "banana bandana ban")
-    ).toDF("doc_id", "text")
-    val words = Seq("the", "the", "the", "then", "there", "other",
-      "thin", "myth", "math", "the", "banana", "bandana", "ban")
-      .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    assert(PipelineOps.bpeTrain(docs, 8, maxBatch = 8) == naiveTrain(words, 8))
   }
 
-  /** Pure-Scala mirror of [[PipelineOps.bpeTrain]]'s BATCHED loop — same
-    * (count desc, p, c) ranking, same snapshot caps, the production
-    * [[PipelineOps.bpeAcceptBatch]] rule itself, and the same one-pass
-    * rewrite semantics as the Spark fold (first accepted rule wins at a
-    * position; a merged symbol never feeds another rule in the same pass).
-    * Lets the acceptance rule fuzz at volume without a Spark round per
-    * trial; Spark-mirror fidelity is pinned separately below.
-    */
-  private def batchedNaiveTrain(words: Map[String, Long], k: Int,
-      maxBatch: Int): Seq[(String, String, Long)] = {
-    var vocab = words.toVector.map { case (w, c) => (w.map(_.toString).toVector, c) }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var done = false
-    while (out.size < k && !done) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-        .withDefaultValue(0L)
-      for ((syms, c) <- vocab; j <- 0 until syms.length - 1)
-        counts((syms(j), syms(j + 1))) += c
-      if (counts.isEmpty) done = true
-      else {
-        val want = math.min(math.max(1, maxBatch), k - out.size)
-        // mirror the production top-M stats derivation: one ranked fetch,
-        // caps exact inside it, floor-bounded (M-th count) outside it
-        val fetch = if (want > 1) math.max(want, 256) else 1
-        val rows = counts.toSeq.sortBy { case ((a, b), m) => (-m, a, b) }
-          .take(fetch).map { case ((a, b), m) => (a, b, m) }
-        val ranked = rows.take(want)
-        val accepted =
-          if (ranked.length == 1) ranked
-          else {
-            val floor = if (rows.length < fetch) 0L else rows.last._3
-            val maxIn = rows.groupBy(_._2).map { case (s, v) => s -> v.map(_._3).max }
-            val maxOut = rows.groupBy(_._1).map { case (s, v) => s -> v.map(_._3).max }
-            PipelineOps.bpeAcceptBatch(ranked, maxIn, maxOut, floor)
-          }
-        out ++= accepted
-        val rules = accepted.map(t => (t._1, t._2))
-        vocab = vocab.map { case (syms, cn) =>
-          val nb = scala.collection.mutable.ArrayBuffer[String](syms.head)
-          for (x <- syms.tail) {
-            rules.find { case (p, c) => x == c && nb.last == p } match {
-              case Some((p, c)) => nb(nb.length - 1) = p + c
-              case None => nb += x
-            }
-          }
-          (nb.toVector, cn)
-        }
-      }
-    }
-    out.toSeq
-  }
-
-  test("adversarial batch fuzz: ties, cascades, concat conflation; maxBatch 2/3/8/64") {
-    // The acceptance rule's soundness is subtle (VERDICT r4 / ADVICE: a
-    // concat pre-existing via another factorization conflates created-pair
-    // routes) — fuzz it at volume against sequential Sennrich on corpora
-    // BUILT to reach those states. 450 trials across three generators.
+  test("bpeTrain: tie, cascade and concat-conflation corpora match the naive trainer") {
     val rnd = new scala.util.Random(20260822)
-    val batches = Seq(2, 3, 8, 64)
-    var trials = 0
-    def check(words: Seq[String], mb: Int, k: Int, tag: String): Unit = {
-      val wc = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val want = naiveTrain(wc, k)
-      val got = batchedNaiveTrain(wc, k, mb)
-      assert(got == want, s"$tag maxBatch=$mb k=$k words=$words")
-      trials += 1
-    }
     // 1) tie-heavy: 2-char alphabet, equal counts — every round is a tie
-    //    pile where accepting past the head is usually unsound
-    for (t <- 0 until 150) {
+    //    pile that the (count desc, pair asc) law must break
+    for (t <- 0 until 12) {
       val words = (0 until 10).map { _ =>
         (1 to (2 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(2)).toChar).mkString
       }
-      check(words, batches(t % 4), 6 + rnd.nextInt(8), s"tie/$t")
+      checkTrain(words, 6 + rnd.nextInt(8), s"tie/$t")
     }
     // 2) cascade-heavy: long runs and alternations — each merge's new
     //    symbol immediately forms the next round's top pairs
-    for (t <- 0 until 150) {
+    for (t <- 0 until 12) {
       val a = ('a' + rnd.nextInt(2)).toChar.toString
       val b = ('a' + rnd.nextInt(3)).toChar.toString
       val words = (0 until 8).map { _ =>
@@ -282,40 +199,25 @@ class BpeSpec extends AnyFunSuite {
           case _ => a * (1 + rnd.nextInt(3)) + b * (1 + rnd.nextInt(3))
         }
       }
-      check(words, batches(t % 4), 6 + rnd.nextInt(8), s"cascade/$t")
+      checkTrain(words, 6 + rnd.nextInt(8), s"cascade/$t")
     }
-    // 3) conflation-targeted: seed patterns whose merges create symbols
-    //    string-equal to other factorizations' concats ('aba' via (ab,a)
-    //    vs (a,ba)) with skewed multiplicities so those pairs top rounds —
-    //    the family that exercises rule 4's conflation-aware sum cap
-    //    (accepting a ccPre candidate mid-batch must still be sequential)
+    // 3) conflation: merges that create symbols string-equal to other
+    //    factorizations' concats ('aba' via (ab,a) vs (a,ba)), with skewed
+    //    multiplicities so those pairs top rounds
     val seeds = Seq("aba", "abab", "aab", "baa", "aabaa", "ababa", "bab",
       "abba", "aabab", "ababab", "baba", "aaba")
-    for (t <- 0 until 350) {
+    for (t <- 0 until 12) {
       val words = (0 until (6 + rnd.nextInt(5))).flatMap { _ =>
         val w = seeds(rnd.nextInt(seeds.length))
         Seq.fill(1 + rnd.nextInt(6))(w)
       }
-      check(words, batches(t % 4), 6 + rnd.nextInt(12), s"conflate/$t")
+      checkTrain(words, 6 + rnd.nextInt(12), s"conflate/$t")
     }
-    assert(trials == 650)
-  }
-
-  test("Spark bpeTrain matches the pure batched mirror on adversarial corpora") {
-    // mirror fidelity: the DataFrame loop and batchedNaiveTrain make the
-    // same per-round decisions (ranking, caps, acceptance, rewrite) —
-    // checked on one corpus per generator family at two maxBatch values
-    val corpora = Seq(
-      Seq("abab", "abab", "aba", "bab", "aab", "baa"),           // conflation
-      Seq("aaaa", "aaa", "aa", "aaaa", "abab", "abab"),          // runs/ties
-      Seq("the", "the", "then", "there", "banana", "bandana"))   // prose-like
-    for (words <- corpora; mb <- Seq(3, 64)) {
-      val docs = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
-      val wc = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val want = naiveTrain(wc, 10)
-      assert(batchedNaiveTrain(wc, 10, mb) == want, s"mirror: $words mb=$mb")
-      assert(PipelineOps.bpeTrain(docs, 10, maxBatch = mb) == want,
-        s"spark: $words mb=$mb")
-    }
+    // one fixed corpus per family
+    for (words <- Seq(
+        Seq("abab", "abab", "aba", "bab", "aab", "baa"),           // conflation
+        Seq("aaaa", "aaa", "aa", "aaaa", "abab", "abab"),          // runs/ties
+        Seq("the", "the", "then", "there", "banana", "bandana")))  // prose-like
+      checkTrain(words, 10, "fixed")
   }
 }

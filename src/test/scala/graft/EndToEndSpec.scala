@@ -19,6 +19,12 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `f` with one session conf set, then unsets it. */
+  def withConf[T](kv: (String, String))(f: => T): T = {
+    spark.conf.set(kv._1, kv._2)
+    try f finally spark.conf.unset(kv._1)
+  }
 }
 
 /** End-to-end: distributed build -> manifest -> Searcher vs a fully
@@ -280,7 +286,6 @@ class EndToEndSpec extends AnyFunSuite {
     def fingerprint(dir: String): Array[(Int, String, String, Int, Long, Long, Long, Long)] = {
       import spark.implicits._
       spark.read.parquet(s"$dir/postings")
-        .where("field != '__stats__'") // stats rows carry wall-clock metrics
         .selectExpr("segment", "field", "term", "docFreq", "totalTf",
           "crc32(postings)", "crc32(skip)", "crc32(positions)")
         .as[(Int, String, String, Int, Long, Long, Long, Long)]

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.{WebCorpus, WebDoc}
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, IndexManifest, PostingRow, SegmentMerger}
 import graft.search._
 
 class TokenizeExprSpec extends AnyFunSuite {
@@ -48,6 +48,17 @@ class CompressionSpec extends AnyFunSuite {
     assert(codecs(zDir) == Set("zstd"))
     assert(codecs(sDir) == Set("snappy"))
     assert(zHits == sHits && zHits.nonEmpty) // codec never changes results
+    // a merge writes its segment with the codec the manifest records
+    val m = IndexManifest.read(spark, zDir).get
+    assert(m.compression == "zstd" && m.segments.size > 1)
+    val merged = SegmentMerger.merge(spark, zDir, SegmentMerger.plan(m, m.segments.size))
+    assert(merged.segments.size == 1)
+    assert(codecs(zDir) == Set("zstd"))
+    assert(new Searcher(spark, zDir).topDocs(q, 10).map(h => (h.url, h.score)).toSeq == zHits)
+    // the manifest is the only home of segment metrics: neither a build
+    // nor a merge writes a `__stats__` row
+    for (dir <- Seq(zDir, sDir))
+      assert(spark.read.parquet(s"$dir/postings").where(col("field") === PostingRow.StatsField).isEmpty)
   }
 }
 

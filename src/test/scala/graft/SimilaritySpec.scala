@@ -122,6 +122,18 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("pqTopK / ivfPqTopK with rerank == k return k rows; the query takes no survivor slot") {
+    val e = genEmbeddings(400)
+    for (q <- Seq(0L, 7L, 123L)) {
+      val pq = PipelineOps.pqTopK(e, q, 10, rerank = 10).collect().map(_.getLong(0))
+      val ivfPq = PipelineOps.ivfPqTopK(e, q, 10, rerank = 10).collect().map(_.getLong(0))
+      for ((name, ids) <- Seq("pqTopK" -> pq, "ivfPqTopK" -> ivfPq)) {
+        assert(ids.length == 10, s"$name query $q: ${ids.length} rows")
+        assert(!ids.contains(q) && ids.distinct.length == 10, s"$name query $q: ${ids.toSeq}")
+      }
+    }
+  }
+
   test("native vec_cosine / lsh_bucket kernels == HOF forms (bit-exact)") {
     val e = genEmbeddings(500)
     // cosine: native expression vs aggregate/zip_with fold, exact doubles

@@ -78,7 +78,10 @@ class SnapshotSpec extends AnyFunSuite {
         (h.url, java.lang.Float.floatToRawIntBits(h.score))).toList), s.batchCount(batch))
     val base = fingerprint(new Searcher(spark, dir))
 
-    val m2 = SegmentMerger.merge(spark, dir, SegmentMerger.plan(m1, 4), keepOld = true)
+    // one merge task per shuffle partition, so the merged segment is
+    // written as several files (small merges coalesce to one task)
+    val m2 = TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(
+      SegmentMerger.merge(spark, dir, SegmentMerger.plan(m1, 4), keepOld = true))
     val merged = new java.io.File(s"$dir/postings/segment=${m2.segments.head.segment}")
     assert(merged.listFiles.count(_.getName.endsWith(".parquet")) > 1)
     assert(fingerprint(Searcher.atSnapshot(spark, dir, m1.commitSeq)) == base)

@@ -39,7 +39,10 @@ class SegmentReaderSpec extends AnyFunSuite {
   /** Pre-merge segments and the merged one, whose rows span several files. */
   private lazy val (dir, segments) = {
     val (d, m1) = build()
-    val m2 = SegmentMerger.merge(spark, d, SegmentMerger.plan(m1, 4), keepOld = true)
+    // one merge task per shuffle partition, so the merged segment is
+    // written as several files (small merges coalesce to one task)
+    val m2 = TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(
+      SegmentMerger.merge(spark, d, SegmentMerger.plan(m1, 4), keepOld = true))
     val segs = SegmentFiles.list(conf, d, m1.segmentIds ++ m2.segmentIds)
     assert(segs.last.files.size > 1, "the merged segment spans several files")
     (d, segs)
