@@ -696,8 +696,8 @@ object SparkEntry {
     // candidate set is a genuine subset, so the approximate side's row
     // count varies with the draw's cell geometry and is not
     // oracle-replayable. Gate 850 = regression floor on this noise
-    // corpus (RecallProbe measured 0.962/0.947/0.949 across
-    // sf0.001/0.01/0.1 at nprobe=8 — nprobe=4 sits at ~0.75, so the
+    // corpus (0.962/0.947/0.949 across sf0.001/0.01/0.1 at nprobe=8,
+    // BENCH.md "contrastive pair recall" — nprobe=4 sits at ~0.75, so the
     // floor also pins the probe depth); the >=0.8 design gate on
     // clustered data lives in RecallGateSpec (0.994 measured)
     "q_contrastive_pairs_ivf" -> ((s, d) => {

@@ -40,22 +40,17 @@ final case class IndexConfig(
     textFieldAnalyzers: Map[String, String] = Map.empty,
     langField: String = "lang",
     tsField: String = "warc_ts",
-    maxDocsPerSegment: Int = 1 << 21,
-    /** Posting-arena size guard (docs per in-memory segment arena). A
-      * partition streaming more docs than this auto-splits into further
-      * segments even below [[maxDocsPerSegment]]: each concurrent build
-      * task holds one arena, so arenas must be sized to a worker CORE's
-      * memory share, not to the whole heap — BENCH.md's 10M windows
-      * measured the failure directly (312k-doc arenas × 4 concurrent
-      * tasks = GC-bound, build scaling eff 0.624; ~104k-doc arenas =
-      * 0.979). 150k ≈ the green band's ceiling for the benchmark's
-      * ~550-char docs; raise it only together with per-core memory.
-      * The effective segment cut is min(maxDocsPerSegment, arenaBandDocs),
-      * so the guard is on by default and explicit [[maxDocsPerSegment]]
-      * settings below the band behave exactly as before.
+    /** Docs per in-memory segment arena (the posting-arena size guard).
+      * Each concurrent build task holds one arena, so arenas must be sized
+      * to a worker CORE's memory share, not to the whole heap — BENCH.md's
+      * 10M windows measured the failure directly (312k-doc arenas × 4
+      * concurrent tasks = GC-bound, build scaling eff 0.624; ~104k-doc
+      * arenas = 0.979). 150k ≈ the green band's ceiling for the
+      * benchmark's ~550-char docs; raise it only together with per-core
+      * memory.
       */
-    arenaBandDocs: Int = 150000,
-    /** Byte-denominated companion to [[arenaBandDocs]]: a chunk also cuts
+    maxDocsPerSegment: Int = 150000,
+    /** Byte-denominated companion to [[maxDocsPerSegment]]: a chunk also cuts
       * when its accumulated analyzed-text bytes reach this budget, so the
       * guard is corpus-shape-independent — a corpus of 10× longer docs
       * cuts 10× smaller (by count) segments instead of GC-thrashing inside
@@ -66,7 +61,6 @@ final case class IndexConfig(
       * fills first; `Long.MaxValue` disables.
       */
     arenaBandBytes: Long = 80L << 20,
-    storePositions: Boolean = true,
     /** Numeric columns indexed as TYPED terms: each value becomes one
       * order-preserving `TypedTerms.encodeLong` term in the field's own term
       * space (the reference's u64/i64/date term encoding,
@@ -148,7 +142,6 @@ final case class IndexConfig(
       * the query parser analyzes with the SAME chain.
       */
     textAnalyzer: String = "default") {
-  /** chunk ordinal cap per partition — segment id = pid * ChunksPerPartition + chunk */
   def rawFields: Seq[String] = Seq(keyField, langField)
 }
 
@@ -175,6 +168,7 @@ final case class InDoc(key: String, text: String, lang: String, ts: java.sql.Tim
 
 object IndexBuilder {
 
+  /** chunk ordinal cap per partition — segment id = pid * ChunksPerPartition + chunk */
   val ChunksPerPartition = 4096
 
   /** Build (or resume) an inverted index over `source`.
@@ -219,7 +213,7 @@ object IndexBuilder {
     // (restricted to this build's segment-id range so streaming appends never
     // touch other batches' output)
     cleanUnfinished(spark, indexDir, done, segmentBase,
-      segmentBase + cfg.numPartitions * ChunksPerPartition)
+      segmentBase + cfg.numPartitions.toLong * ChunksPerPartition)
 
     // unused feature columns ship as NULL, not empty collections — the
     // deserializer then skips per-row Map/Seq materialization entirely
@@ -300,15 +294,14 @@ object IndexBuilder {
     val postings = parted.mapPartitions { it =>
       val cfg = bcCfg.value
       val pid = TaskContext.getPartitionId()
-      chunked(it, math.min(cfg.maxDocsPerSegment, cfg.arenaBandDocs),
-          cfg.arenaBandBytes)
+      chunked(it, cfg.maxDocsPerSegment, cfg.arenaBandBytes)
         .zipWithIndex.flatMap { case (chunk, ci) =>
         // segment-id layout allots ChunksPerPartition ids per partition; a
         // partition overflowing it would silently collide with the next
         // partition's id range (and break cleanUnfinished's range math)
         require(ci < ChunksPerPartition,
           s"partition $pid produced more than $ChunksPerPartition segments " +
-            "(raise numPartitions or maxDocsPerSegment/arenaBandDocs)")
+            "(raise numPartitions or maxDocsPerSegment)")
         val segId = bcBase.value + pid * ChunksPerPartition + ci
         if (bcDone.value.contains(segId)) Iterator.empty
         else {
@@ -420,7 +413,7 @@ object IndexBuilder {
         s"arena (~${estArenaBytes >> 20} MiB analyzed text, " +
         s"$conc concurrent tasks): 10M-doc windows measured degraded " +
         "4-core build efficiency below this band (BENCH.md r4 guard-1) — " +
-        "raise executor heap or lower arenaBandDocs/arenaBandBytes")
+        "raise executor heap or lower maxDocsPerSegment/arenaBandBytes")
     else None
   }
 
@@ -503,7 +496,7 @@ object IndexBuilder {
       cfg.textFields.map(f => f -> new Array[Byte](numDocs)).toMap
     val extraTokens = new scala.collection.mutable.HashMap[String, Long]()
     @inline def accAdd(m: java.util.HashMap[(String, String), Acc], key: (String, String),
-        docId: Int, position: Int, storePositions: Boolean): Unit = {
+        docId: Int, position: Int): Unit = {
       var acc = m.get(key)
       if (acc == null) { acc = Acc(new IntVec(), new IntVec(), new IntVec()); m.put(key, acc) }
       if (acc.lastDoc != docId) {
@@ -511,7 +504,7 @@ object IndexBuilder {
         acc.tfsV += 1
         acc.lastDoc = docId
       } else acc.tfsV.incrLast()
-      if (storePositions) acc.posV += position
+      acc.posV += position
     }
 
     var docId = 0
@@ -534,7 +527,7 @@ object IndexBuilder {
           acc.tfsV += 1
           acc.lastDoc = docId
         } else acc.tfsV.incrLast()
-        if (cfg.storePositions) acc.posV += position
+        acc.posV += position
       }
       val nKept: Int =
         if (d.textVals != null) {
@@ -580,7 +573,7 @@ object IndexBuilder {
         val ftoks = extraChains(f)(v)
         var j = 0
         while (j < ftoks.length) {
-          accAdd(extra, (f, ftoks(j).text), docId, ftoks(j).position, cfg.storePositions)
+          accAdd(extra, (f, ftoks(j).text), docId, ftoks(j).position)
           j += 1
         }
         extraNorms(f)(docId) = graft.index.FieldNorms.fieldNormToId(ftoks.length.toLong)
@@ -641,7 +634,7 @@ object IndexBuilder {
           catch { case _: Exception => Seq.empty[String] }
         var p = 0
         terms.foreach { t =>
-          accAdd(json, (f, t), docId, p, cfg.storePositions)
+          accAdd(json, (f, t), docId, p)
           p += 1
         }
       }
@@ -654,8 +647,7 @@ object IndexBuilder {
       text.entrySet().asScala.toArray.sortBy(_.getKey).iterator.map { e =>
         val acc = e.getValue
         val enc = PostingsCodec.encode(
-          acc.docsV.toArray, acc.tfsV.toArray,
-          if (cfg.storePositions) acc.posV.toArray else null,
+          acc.docsV.toArray, acc.tfsV.toArray, acc.posV.toArray,
           d => norms(d), withFreqs = true)
         postingsBytes += enc.postings.length + enc.skip.length + enc.positions.length
         PostingRow(segId, cfg.textField, e.getKey, enc.docFreq, enc.totalTf,
@@ -669,8 +661,7 @@ object IndexBuilder {
         val acc = e.getValue
         val fn = extraNorms(f)
         val enc = PostingsCodec.encode(
-          acc.docsV.toArray, acc.tfsV.toArray,
-          if (cfg.storePositions) acc.posV.toArray else null,
+          acc.docsV.toArray, acc.tfsV.toArray, acc.posV.toArray,
           dd => fn(dd), withFreqs = true)
         postingsBytes += enc.postings.length + enc.skip.length + enc.positions.length
         PostingRow(segId, f, t, enc.docFreq, enc.totalTf, enc.postings, enc.skip, enc.positions)
@@ -692,8 +683,7 @@ object IndexBuilder {
         val (f, t) = e.getKey
         val acc = e.getValue
         val enc = PostingsCodec.encode(
-          acc.docsV.toArray, acc.tfsV.toArray,
-          if (cfg.storePositions) acc.posV.toArray else null,
+          acc.docsV.toArray, acc.tfsV.toArray, acc.posV.toArray,
           dd => norms(dd), withFreqs = true)
         postingsBytes += enc.postings.length + enc.skip.length + enc.positions.length
         PostingRow(segId, f, t, enc.docFreq, enc.totalTf, enc.postings, enc.skip, enc.positions)
@@ -719,7 +709,7 @@ object IndexBuilder {
   }
 
   private def cleanUnfinished(spark: SparkSession, indexDir: String, done: Set[Int],
-      lo: Int, hi: Int): Unit = {
+      lo: Int, hi: Long): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     // an on-disk segment dir that is absent from the current manifest but
     // referenced by a retained snapshot (the manifests/ log) is NOT partial

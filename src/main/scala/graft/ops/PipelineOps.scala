@@ -1784,10 +1784,12 @@ object PipelineOps {
     var cur = words.localCheckpoint(eager = false)
     var exhausted = false
     while (merges.size < numMerges && !exhausted) {
+      // split once per row, then pair each symbol with its successor
       val top = cur
+        .select(col("cnt"), split(col("syms"), " ").as("a"))
         .select(col("cnt"), explode(expr(
-          "transform(slice(split(syms, ' '), 1, size(split(syms, ' ')) - 1)," +
-            " (x, i) -> struct(x AS p, element_at(split(syms, ' '), i + 2) AS c))")).as("pr"))
+          "zip_with(slice(a, 1, size(a) - 1), slice(a, 2, size(a) - 1)," +
+            " (x, y) -> struct(x AS p, y AS c))")).as("pr"))
         .groupBy(col("pr.p").as("p"), col("pr.c").as("c"))
         .agg(sum("cnt").as("n"))
         .orderBy(col("n").desc, col("p"), col("c"))

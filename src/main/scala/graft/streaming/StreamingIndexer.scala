@@ -24,14 +24,27 @@ import graft.index.{IndexBuilder, IndexConfig, IndexManifest}
 object StreamingIndexer {
 
   val BatchSegmentStride: Int = 1 << 20
+  /** the last batch whose whole id range fits in Int */
+  val MaxBatchId: Long = Int.MaxValue / BatchSegmentStride - 1
 
   /** Append one (batch) DataFrame to the index — also usable directly for
     * incremental batch ingestion.
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
-      cfg: IndexConfig, batchId: Long): IndexManifest =
-    IndexBuilder.build(spark, batch, indexDir, cfg, resume = true,
-      segmentBase = ((batchId + 1) * BatchSegmentStride).toInt)
+      cfg: IndexConfig, batchId: Long): IndexManifest = {
+    // batch b owns ids [(b + 1) * stride, (b + 2) * stride): a range that
+    // wraps past Int or overruns the stride aliases another batch's ids,
+    // and ids already in the manifest make the build skip this batch
+    // without a word
+    val perPartition = IndexBuilder.ChunksPerPartition
+    require(cfg.numPartitions.toLong * perPartition <= BatchSegmentStride,
+      s"numPartitions ${cfg.numPartitions} x $perPartition segment ids overruns the " +
+        s"batch stride $BatchSegmentStride (at most ${BatchSegmentStride / perPartition} partitions)")
+    require(batchId >= 0 && batchId <= MaxBatchId,
+      s"batchId $batchId: its segment ids overflow Int (batchId must lie in 0..$MaxBatchId)")
+    val base = (batchId + 1) * BatchSegmentStride
+    IndexBuilder.build(spark, batch, indexDir, cfg, resume = true, segmentBase = base.toInt)
+  }
 
   /** Start the streaming ingestion query. */
   def start(stream: DataFrame, indexDir: String, cfg: IndexConfig,

@@ -11,7 +11,7 @@ import graft.search._
   * scaling eff 0.624 because the failure was SILENT: IndexBuilder accepted
   * any partition count and GC-thrashed on oversized arenas. The guard makes
   * the documented SPARK_GRAFT_SCALE_PARTS band rule the default behavior,
-  * at every scale (the cut is min(maxDocsPerSegment, arenaBandDocs)).
+  * at every scale (the cut is maxDocsPerSegment, 150k docs by default).
   */
 class ArenaGuardSpec extends AnyFunSuite {
 
@@ -24,7 +24,7 @@ class ArenaGuardSpec extends AnyFunSuite {
     // 250-doc band = the same docs/partition >> band shape as 10M/32 parts
     val dirA = java.nio.file.Files.createTempDirectory("graft-arena-a").toString
     val mA = IndexBuilder.build(spark, docs, dirA,
-      IndexConfig(numPartitions = 2, arenaBandDocs = 250))
+      IndexConfig(numPartitions = 2, maxDocsPerSegment = 250))
     assert(mA.segments.size > 2, "oversized partitions must cut extra segments")
     assert(mA.segments.forall(_.numDocs <= 250),
       s"every arena within the band: ${mA.segments.map(_.numDocs)}")
@@ -34,14 +34,8 @@ class ArenaGuardSpec extends AnyFunSuite {
     // segment per partition as before
     val dirB = java.nio.file.Files.createTempDirectory("graft-arena-b").toString
     val mB = IndexBuilder.build(spark, docs, dirB,
-      IndexConfig(numPartitions = 2, arenaBandDocs = 1000))
+      IndexConfig(numPartitions = 2, maxDocsPerSegment = 1000))
     assert(mB.segments.size == 2)
-
-    // an explicit maxDocsPerSegment below the band still wins (min rule)
-    val dirC = java.nio.file.Files.createTempDirectory("graft-arena-c").toString
-    val mC = IndexBuilder.build(spark, docs, dirC,
-      IndexConfig(numPartitions = 2, maxDocsPerSegment = 100, arenaBandDocs = 250))
-    assert(mC.segments.forall(_.numDocs <= 100))
 
     // segment geometry must not change results: same counts + same top
     // hits on the split and unsplit trees (docId rebase is per-segment)
@@ -63,7 +57,7 @@ class ArenaGuardSpec extends AnyFunSuite {
 
     val dirA = java.nio.file.Files.createTempDirectory("graft-arena-long-a").toString
     val mA = IndexBuilder.build(spark, docs, dirA,
-      IndexConfig(numPartitions = 1, arenaBandDocs = 1000,
+      IndexConfig(numPartitions = 1, maxDocsPerSegment = 1000,
         arenaBandBytes = 100000L))
     assert(mA.segments.size >= 8,
       s"bytes band must cut huge-doc arenas: ${mA.segments.size} segments")
@@ -75,7 +69,7 @@ class ArenaGuardSpec extends AnyFunSuite {
     // bytes band disabled -> doc band alone governs (one segment here)
     val dirB = java.nio.file.Files.createTempDirectory("graft-arena-long-b").toString
     val mB = IndexBuilder.build(spark, docs, dirB,
-      IndexConfig(numPartitions = 1, arenaBandDocs = 1000,
+      IndexConfig(numPartitions = 1, maxDocsPerSegment = 1000,
         arenaBandBytes = Long.MaxValue))
     assert(mB.segments.size == 1)
 

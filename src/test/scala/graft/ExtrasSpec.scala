@@ -195,6 +195,46 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("appendBatch rejects segment-id ranges that wrap past Int or overrun the stride") {
+    import graft.streaming.StreamingIndexer
+    val dir = java.nio.file.Files.createTempDirectory("graft-stride").toString
+    val cfg = IndexConfig(numPartitions = 2)
+    IndexBuilder.build(spark, WebCorpus.generate(spark, 60L, 2).toDF(), dir, cfg)
+    val more = WebCorpus.generate(spark, 40L, 5).toDF()
+      .withColumn("url", concat(lit("b-"), col("url")))
+    // jobs of the "stride" group, counted up to a later marker job (the
+    // listener bus delivers events in order)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("stride", "rejected appends")
+      // batch 4095's base (4096 * 2^20) wraps to 0: the ids the first
+      // build committed, so the build would skip every segment
+      intercept[IllegalArgumentException](StreamingIndexer.appendBatch(spark, more, dir, cfg, 4095L))
+      intercept[IllegalArgumentException](StreamingIndexer.appendBatch(spark, more, dir, cfg, 2047L))
+      // 257 x 4096 ids run past the 2^20 stride into batch 1's range
+      intercept[IllegalArgumentException](StreamingIndexer.appendBatch(
+        spark, more, dir, IndexConfig(numPartitions = 257), 0L))
+      spark.sparkContext.setJobGroup("marker", "marker")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen.contains("marker"))
+      assert(!seen.contains("stride"), "no Spark job may run before the range check")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(IndexManifest.read(spark, dir).get.totalDocs == 60L)
+    // the last batch whose range fits still appends
+    assert(StreamingIndexer.appendBatch(spark, more, dir, cfg, StreamingIndexer.MaxBatchId)
+      .totalDocs == 100L)
+  }
+
   test("streaming exact dedup: first occurrence per fingerprint survives batches") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
