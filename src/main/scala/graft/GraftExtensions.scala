@@ -102,8 +102,12 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions` entry point. */
+/** `spark.sql.extensions` entry point: the SQL functions and the planner
+  * strategy of the search engine's segment scans.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => search.SegmentScanStrategy)
+  }
 }

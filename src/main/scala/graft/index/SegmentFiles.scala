@@ -112,6 +112,16 @@ object SegmentFiles {
     val files, rows, bytes, opens, decodes, cachedBytes = new AtomicLong
     def snapshot: Snapshot =
       Snapshot(files.get, rows.get, bytes.get, opens.get, decodes.get, cachedBytes.get)
+
+    /** Rows, opens and decodes counted on each thread: a read runs on the
+      * calling thread, so a kernel task's own reads are its thread's delta.
+      */
+    private val perThread = ThreadLocal.withInitial[Array[Long]](() => new Array[Long](3))
+    private[index] def addRows(n: Long): Unit = { rows.addAndGet(n); perThread.get()(0) += n }
+    private[index] def opened(): Unit = { opens.incrementAndGet(); perThread.get()(1) += 1 }
+    private[index] def decoded(): Unit = { decodes.incrementAndGet(); perThread.get()(2) += 1 }
+    /** The calling thread's rows, opens and decodes so far. */
+    def onThisThread: Seq[Long] = perThread.get().toSeq
   }
 
   final case class Snapshot(files: Long, rows: Long, bytes: Long, opens: Long, decodes: Long,
@@ -124,11 +134,13 @@ object SegmentFiles {
 
   /** The files of each of `segments` under `indexDir/postings`, skipping
     * `_`/`.`-prefixed names (commit markers, checksums) as Spark's file
-    * index does. A missing segment directory lists as no files.
+    * index does. A missing segment directory lists as no files. Cached
+    * readers of this index's files that are gone from disk are dropped
+    * ([[dropGone]]).
     */
   def list(conf: Configuration, indexDir: String, segments: Seq[Int]): Seq[SegmentFiles] = {
     val fs = new Path(indexDir).getFileSystem(conf)
-    segments.map { s =>
+    val listed = segments.map { s =>
       val dir = new Path(indexDir, s"postings/segment=$s")
       val files = if (!fs.exists(dir)) Array.empty[FileStatus] else fs.listStatus(dir)
       SegmentFiles(s, files.toSeq
@@ -136,6 +148,18 @@ object SegmentFiles {
         .sortBy(_.getPath.getName)
         .map(st => File(st.getPath.toString, st.getLen, st.getModificationTime)))
     }
+    dropGone(conf, indexDir, listed.flatMap(_.files).toSet)
+    listed
+  }
+
+  /** Drops this JVM's cached readers of `indexDir`'s files that are not
+    * `listed` and are gone from disk as cached (merged away, deleted or
+    * rewritten). Listing runs it on the driver, each segment scan task on
+    * its executor.
+    */
+  def dropGone(conf: Configuration, indexDir: String, listed: Set[File]): Unit = {
+    val fs = new Path(indexDir).getFileSystem(conf)
+    SegmentReader.dropGone(fs, fs.makeQualified(new Path(indexDir, "postings")).toString + "/", listed)
   }
 
   /** Opens `file` — with its `footer` when known, else reading it — for
@@ -157,7 +181,7 @@ object SegmentFiles {
     val reader =
       if (footer == null) ParquetFileReader.open(in, opts)
       else ParquetFileReader.open(in, footer, opts, in.newStream())
-    Counters.opens.incrementAndGet()
+    Counters.opened()
     try body(reader)
     finally {
       reader.close()

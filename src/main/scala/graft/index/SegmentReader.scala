@@ -3,6 +3,7 @@ package graft.index
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -69,7 +70,7 @@ private[index] final class SegmentReader private (val file: SegmentFiles.File) {
           decode(r, segment, columns, test) { row => f(row); n += 1 }
         }
     }
-    Counters.rows.addAndGet(n)
+    Counters.addRows(n)
   }
 
   /** The decoded dictionary and the blob columns `columns` project,
@@ -110,7 +111,7 @@ private[index] final class SegmentReader private (val file: SegmentFiles.File) {
       reserve(this, size) && {
         try decodePart
         catch { case NonFatal(e) => release(this, size); throw e }
-        Counters.decodes.incrementAndGet()
+        Counters.decoded()
         true
       }
     }
@@ -199,6 +200,21 @@ private[index] object SegmentReader {
   private def release(r: SegmentReader, size: Long): Unit = lru.synchronized {
     r.bytes -= size
     if (lru.get(r.file) eq r) Counters.cachedBytes.addAndGet(-size)
+  }
+
+  /** Drops the readers of files under `prefix` that are not `listed` and no
+    * longer exist as cached (same path, length and modification time). A
+    * read holding a dropped reader finishes on the parts it holds.
+    */
+  private[index] def dropGone(fs: FileSystem, prefix: String, listed: Set[SegmentFiles.File]): Unit = {
+    val others = lru.synchronized(lru.keySet.asScala.filter(f => f.path.startsWith(prefix) && !listed(f)).toList)
+    def onDisk(f: SegmentFiles.File) =
+      try { val st = fs.getFileStatus(new Path(f.path)); st.getLen == f.length && st.getModificationTime == f.mtime }
+      catch { case _: java.io.FileNotFoundException => false }
+    val gone = others.filterNot(onDisk)
+    if (gone.nonEmpty) lru.synchronized {
+      gone.foreach(f => Option(lru.remove(f)).foreach(r => Counters.cachedBytes.addAndGet(-r.bytes)))
+    }
   }
 
   /** The estimated size of the readers held (tests: it equals `cachedBytes`). */

@@ -2,8 +2,15 @@ package graft.search
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.SerializableWritable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ScanShim
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.index.{IndexManifest, PostingRow, SegmentFiles, Snapshots}
 import graft.index.SegmentFiles.{AllOf, Clause, Terms}
 
@@ -19,12 +26,15 @@ import graft.index.SegmentFiles.{AllOf, Clause, Terms}
   *      (field, term, docFreq) columns per batch ([[TermDictionary]] over
   *      [[SegmentFiles]]; doc freqs memoized; N, totalTokens from the
   *      manifest) -> BM25 weights -> compiled queries;
-  *   2. executors ([[fanOut]]): one task per (segment, query shard) reads
-  *      its own segment's files, pruned to its queries' terms and ranges,
-  *      runs their scorer DAG + WAND top-k (`collect_segment`; the rayon
-  *      fan-out, `src/core/executor.rs:11-37`) and resolves its top docs'
-  *      urls from the segment's `__doc__` rows (the store reader);
-  *   3. driver: TopNComputer merge of each query's per-segment fruits
+  *   2. executors ([[scan]]): a [[SegmentScan]] leaf, planned without
+  *      whole-stage codegen into a [[SegmentScanExec]] whose partitions are
+  *      the (segment, query shard) tasks. Each reads its own segment's
+  *      files, pruned to its queries' terms and ranges, runs their scorer
+  *      DAG + WAND top-k (`collect_segment`; the rayon fan-out,
+  *      `src/core/executor.rs:11-37`) and resolves its top docs' urls from
+  *      the segment's `__doc__` rows (the store reader);
+  *   3. driver: the scan's rows are collected straight off the physical
+  *      plan, and each query's per-segment fruits merge in a TopNComputer
   *      (`merge_fruits`, O(segments × k) per query).
   *
   * Every read returns only the query terms' rows (plus the one norms row
@@ -44,8 +54,9 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
       .getOrElse(throw new IllegalStateException(s"no manifest at $indexDir"))
   }
 
-  import spark.implicits._
   import TermDictionary.{Walk, walkOf}
+
+  ScanShim.installStrategy(spark, SegmentScanStrategy)
 
   private def hadoopConf: Configuration = spark.sparkContext.hadoopConfiguration
 
@@ -321,11 +332,12 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
 
   // ------------------------------------------------------------- execution
 
-  /** Query shards per segment for a batch of `nQueries`. A merged index can
-    * have fewer segments than the cluster has cores — one task per segment
-    * would leave most of a 1000-executor cluster idle on a 2-segment index —
-    * so a batch is split into up to 8 shards to fill the cores.
-    * `spark.graft.queryShards` forces the count (at most one shard per query).
+  /** Query shards per segment for a batch of `nQueries` (none for none). A
+    * merged index can have fewer segments than the cluster has cores — one
+    * task per segment would leave most of a 1000-executor cluster idle on a
+    * 2-segment index — so a batch is split into up to 8 shards to fill the
+    * cores. `spark.graft.queryShards` forces the count (at most one shard
+    * per query).
     */
   private def queryShardCount(nQueries: Int): Int = {
     val n = spark.conf.getOption(Searcher.QueryShardsKey) match {
@@ -337,44 +349,34 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
         val nseg = math.max(manifest.segments.size, 1)
         math.min(8, (spark.sparkContext.defaultParallelism + nseg - 1) / nseg)
     }
-    math.max(1, math.min(nQueries, n))
+    math.min(nQueries, n)
   }
 
-  /** The one executor fan-out behind every kernel-running call: one task
-    * per (segment, query shard) — a Dataset of `nParts` single-element
-    * partitions, no exchange — where the i-th query belongs to shard
-    * i % nShards. Each task reads its own segment's files, pruned to
-    * [[kernelClauses]] of ITS shard's queries plus `extra`, and runs
-    * `kernel(task, queries)` over the segment's context and rows.
+  /** The one executor fan-out behind every kernel-running call: a
+    * [[SegmentScan]] of one task per (segment, query shard), where the i-th
+    * query that can match (not `CEmpty`) belongs to shard i % nShards. Each
+    * task reads its own segment's files, pruned to [[kernelClauses]] of ITS
+    * shard's queries plus `extra`, and runs `kernel(task, queries)`, whose
+    * rows have the columns of `columns`. No query that can match, or no
+    * segment, is a scan of no task.
     *
     * A shard is the same segment files, a subset of the queries: sharding
     * costs only the rows shared across shards (norms, tombstones, common
     * terms) read once per shard. Results are bit-identical at any shard
     * count: every query sees the complete postings of its own terms.
     */
-  private def fanOut[T: Encoder](queries: Seq[(CQuery, Int)], extra: Seq[Clause] = Nil)(
-      kernel: (Searcher.SegmentTask, Iterator[(CQuery, Int)]) => Iterator[T]): Dataset[T] = {
-    val nShards = queryShardCount(queries.size)
-    val shardClauses = Array.tabulate(nShards)(s =>
-      kernelClauses(queries.indices.filter(_ % nShards == s).map(i => queries(i)._1), extra))
-    val segs = segmentFiles.toArray
-    val bState = bKernelState
-    val conf = bConf
-    val nParts = math.max(segs.length, 1) * nShards
-    spark.range(0, nParts, 1, nParts).as[Long].mapPartitions(_.flatMap { p =>
-      val (si, shard) = ((p / nShards).toInt, (p % nShards).toInt)
-      if (si >= segs.length) Iterator.empty
-      else {
-        val files = segs(si)
-        val rows = files.rows(conf.value.value, SegmentFiles.KernelColumns, shardClauses(shard))
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val ctx = Searcher.makeContext(rows.iterator, bState.value, files.segment)
-          val mine = queries.iterator.zipWithIndex.collect { case (q, i) if i % nShards == shard => q }
-          kernel(Searcher.SegmentTask(files, conf.value.value, ctx, rows), mine)
-        }
-      }
-    })
+  private def scan(queries: Seq[(CQuery, Int)], columns: Seq[(String, DataType)],
+      extra: Seq[Clause] = Nil)(
+      kernel: (Searcher.SegmentTask, Iterator[(CQuery, Int)]) => Iterator[InternalRow]): LogicalPlan = {
+    val live = queries.filter(_._1 != CQuery.CEmpty)
+    val nShards = queryShardCount(live.size)
+    val shards = Array.tabulate(nShards) { s =>
+      val mine = live.indices.filter(_ % nShards == s).map(live)
+      ScanShard(mine, kernelClauses(mine.map(_._1), extra))
+    }
+    val output = columns.map { case (name, t) =>
+      AttributeReference(name, t, nullable = !t.isInstanceOf[NumericType])() }
+    SegmentScan(output, ScanSpec(indexDir, segmentFiles.toArray, shards, bKernelState, bConf, kernel))
   }
 
   /** Top-k for a batch: each segment's task collects every query's
@@ -385,11 +387,10 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     */
   private def topK(qs: Seq[Query], k: Int, offset: Int): Seq[Array[SearchHit]] = {
     require(offset >= 0, "offset must be >= 0")
-    val live = planAll(qs).zipWithIndex.filter(_._1 != CQuery.CEmpty)
     val kk = k + offset
-    val fruits =
-      if (live.isEmpty) Array.empty[(Int, Long, Float, String)]
-      else fanOut(live) { (task, mine) =>
+    val fruits = ScanShim.collect(spark, scan(planAll(qs).zipWithIndex,
+        Seq("query" -> IntegerType, "addr" -> LongType, "score" -> FloatType, "url" -> StringType)) {
+      (task, mine) =>
         val segFruits = mine.flatMap { case (cq, qi) =>
           val topN = new TopNComputer(kk)
           QueryKernel.topK(cq, task.ctx, kk, topN, task.segment.toLong << 32)
@@ -397,16 +398,16 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
         }.toArray
         val urls = task.urls(segFruits.iterator.map(f => (f._2 & 0xffffffffL).toInt).toSet)
         segFruits.iterator.map { case (qi, addr, score) =>
-          (qi, addr, score, urls((addr & 0xffffffffL).toInt))
+          InternalRow(qi, addr, score, UTF8String.fromString(urls((addr & 0xffffffffL).toInt)))
         }
-      }.collect()
+    })
     // merge fruits: pushes must arrive in ascending global address order
-    val byQuery = fruits.groupBy(_._1)
+    val byQuery = fruits.groupBy(_.getInt(0))
     qs.indices.map { qi =>
-      val fs = byQuery.getOrElse(qi, Array.empty[(Int, Long, Float, String)])
-      val urlOf = fs.iterator.map(f => f._2 -> f._4).toMap
+      val fs = byQuery.getOrElse(qi, Array.empty[InternalRow])
+      val urlOf = fs.iterator.map(f => f.getLong(1) -> f.getUTF8String(3).toString).toMap
       val merged = new TopNComputer(kk)
-      fs.sortBy(_._2).foreach { case (_, addr, score, _) => merged.push(score, addr) }
+      fs.sortBy(_.getLong(1)).foreach(f => merged.push(f.getFloat(2), f.getLong(1)))
       merged.intoSortedVec().drop(offset).zipWithIndex.map { case ((score, addr), rank) =>
         SearchHit(offset + rank + 1, urlOf(addr), score, (addr >>> 32).toInt,
           (addr & 0xffffffffL).toInt)
@@ -442,12 +443,10 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * of its shard, the driver sums the tiny per-segment counts.
     */
   def batchCount(qs: Seq[Query]): Seq[Long] = {
-    val live = planAll(qs).zipWithIndex.filter(_._1 != CQuery.CEmpty)
-    val counts =
-      if (live.isEmpty) Map.empty[Int, Long]
-      else fanOut(live) { (task, mine) =>
-        mine.map { case (cq, qi) => (qi, QueryKernel.count(cq, task.ctx)) }
-      }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+    val counts = ScanShim.collect(spark, scan(planAll(qs).zipWithIndex,
+        Seq("query" -> IntegerType, "count" -> LongType)) { (task, mine) =>
+      mine.map { case (cq, qi) => InternalRow(qi, QueryKernel.count(cq, task.ctx)) }
+    }).groupMapReduce(_.getInt(0))(_.getLong(1))(_ + _)
     qs.indices.map(counts.getOrElse(_, 0L))
   }
 
@@ -490,17 +489,14 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
   /** All matching docs with scores, as a DataFrame (segment, docId, score).
     * Exhaustive (no pruning) — the oracle-checkable full result relation.
     */
-  def allMatches(q: Query, scored: Boolean = true): DataFrame = {
-    val cq = plan(q)
-    if (cq == CQuery.CEmpty)
-      return Seq.empty[(Int, Int, Float)].toDF("segment", "docId", "score")
-    fanOut(Seq(cq -> 0)) { (task, mine) =>
+  def allMatches(q: Query, scored: Boolean = true): DataFrame =
+    ScanShim.ofRows(spark, scan(Seq(plan(q) -> 0),
+        Seq("segment" -> IntegerType, "docId" -> IntegerType, "score" -> FloatType)) { (task, mine) =>
       val seg = task.segment
       mine.flatMap { case (c, _) =>
-        QueryKernel.allMatches(c, task.ctx, scored).map { case (d, s) => (seg, d, s) }
+        QueryKernel.allMatches(c, task.ctx, scored).map { case (d, s) => InternalRow(seg, d, s) }
       }
-    }.toDF("segment", "docId", "score")
-  }
+    })
 
   /** The reference's docs-and-positions iteration surface
     * (`examples/iterating_docs_and_positions.rs`;
@@ -514,23 +510,25 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * `IndexRecordOption::WithFreqsAndPositions`).
     */
   def termDocsAndPositions(field: String, term: String): DataFrame =
-    fanOut(Seq(plan(Query.Term(field, term)) -> 0)) { (task, _) =>
+    ScanShim.ofRows(spark, scan(Seq(plan(Query.Term(field, term)) -> 0),
+        Seq("segment" -> IntegerType, "docId" -> IntegerType, "termFreq" -> IntegerType,
+          "positions" -> ArrayType(IntegerType, containsNull = false))) { (task, _) =>
       val (seg, ctx) = (task.segment, task.ctx)
       val p = ctx.fresh(field, term)
       if (p == null) Iterator.empty
-      else new Iterator[(Int, Int, Int, Array[Int])] {
+      else new Iterator[InternalRow] {
         private def skipDead(): Unit =
           while (p.doc != graft.codec.PostingsCodec.Terminated && ctx.isDeleted(p.doc)) p.advance()
         skipDead()
         override def hasNext: Boolean = p.doc != graft.codec.PostingsCodec.Terminated
-        override def next(): (Int, Int, Int, Array[Int]) = {
-          val out = (seg, p.doc, p.termFreq, p.positionsForCurrent())
+        override def next(): InternalRow = {
+          val out = InternalRow(seg, p.doc, p.termFreq, new GenericArrayData(p.positionsForCurrent()))
           p.advance()
           skipDead()
           out
         }
       }
-    }.toDF("segment", "docId", "termFreq", "positions")
+    })
 
   /** `TopDocs::tweak_score` / `order_by_fast_field` analog
     * (`src/collector/top_score_collector.rs`): matched docs joined to the
@@ -594,30 +592,30 @@ final class Searcher(spark: SparkSession, indexDir: String, asOfSeq: Option[Long
     * builder indexes every ancestor prefix as its own term — so each child's
     * count is |postings(child) ∩ matches|, computed per segment inside the
     * kernel task (the facet rows ride the same pruned read as the query
-    * terms) and summed across segments by one tiny groupBy.
+    * terms) and summed across segments on the driver, which returns the
+    * (facet, count) rows as a local DataFrame.
     */
   def facetCounts(q0: Query, field: String, root: String): DataFrame = {
-    val cq = plan(q0)
-    if (cq == CQuery.CEmpty) return Seq.empty[(String, Long)].toDF("facet", "count")
+    import spark.implicits._
     val prefix = (if (root.endsWith("/")) root.dropRight(1) else root) + "/"
-    fanOut(Seq(cq -> 0), Seq(SegmentFiles.Prefix(field, prefix))) { (task, mine) =>
-        val matched = new java.util.BitSet(task.ctx.numDocs)
-        mine.foreach { case (c, _) =>
-          QueryKernel.allMatches(c, task.ctx, scored = false).foreach { case (d, _) => matched.set(d) }
+    ScanShim.collect(spark, scan(Seq(plan(q0) -> 0), Seq("facet" -> StringType, "count" -> LongType),
+        Seq(SegmentFiles.Prefix(field, prefix))) { (task, mine) =>
+      val matched = new java.util.BitSet(task.ctx.numDocs)
+      mine.foreach { case (c, _) =>
+        QueryKernel.allMatches(c, task.ctx, scored = false).foreach { case (d, _) => matched.set(d) }
+      }
+      task.rows.iterator
+        .filter(r => r.field == field && r.term.startsWith(prefix) &&
+          r.term.indexOf('/', prefix.length) < 0)
+        .map { r =>
+          val (docs, _, _) = graft.codec.PostingsCodec
+            .decodeAll(r.docFreq, r.postings, r.skip, readFreqs = true)
+          var c = 0L
+          docs.foreach(d => if (matched.get(d)) c += 1)
+          (r.term, c)
         }
-        task.rows.iterator
-          .filter(r => r.field == field && r.term.startsWith(prefix) &&
-            r.term.indexOf('/', prefix.length) < 0)
-          .map { r =>
-            val (docs, _, _) = graft.codec.PostingsCodec
-              .decodeAll(r.docFreq, r.postings, r.skip, readFreqs = true)
-            var c = 0L
-            docs.foreach(d => if (matched.get(d)) c += 1)
-            (r.term, c)
-          }
-          .filter(_._2 > 0)
-    }.toDF("facet", "cnt")
-      .groupBy("facet").agg(sum("cnt").as("count"))
+        .collect { case (t, c) if c > 0 => InternalRow(UTF8String.fromString(t), c) }
+    }).groupMapReduce(_.getUTF8String(0).toString)(_.getLong(1))(_ + _).toSeq.toDF("facet", "count")
   }
 
   /** Space-usage report for this snapshot's segments — the reference's

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.index._
-import graft.search.{Query, QueryParser, Searcher}
+import graft.search.{Query, QueryParser, SegmentScan, Searcher}
 
 /** spark-submit entry point for the whole pipeline (north rule: "runs via
   * spark-submit on multi-executor clusters") — the operational surface a
@@ -23,7 +23,8 @@ import graft.search.{Query, QueryParser, Searcher}
   * Commands:
   *   build  <srcParquet> <indexDir> [numPartitions=32] [textCol=text] [keyCol=url] [analyzer=default]
   *   search <indexDir> [--stats] <query...> (QueryParser syntax; top-10;
-  *                                           --stats: segment-read counters)
+  *                                           --stats: segment-read counters
+  *                                           and the scan's metrics)
   *   count  <indexDir> <query...>
   *   aggregate <indexDir> <query...> <aggJson>  (search + ES aggs, one request)
   *   merge  <indexDir> [maxFanIn=16]        (log-policy rounds until stable)
@@ -69,16 +70,20 @@ object IndexCli {
       val stats = args.lift(2).contains("--stats")
       val q = parse(spark, dir, args.drop(if (stats) 3 else 2).mkString(" "))
       val before = SegmentFiles.Counters.snapshot
-      new Searcher(spark, dir).topDocs(q, 10).foreach { h =>
-        println(f"${h.rank}%3d  ${h.score}%10.4f  ${h.url}")
-      }
+      val (hits, queries) = SegmentScan.executedDuring(spark)(new Searcher(spark, dir).topDocs(q, 10))
+      hits.foreach(h => println(f"${h.rank}%3d  ${h.score}%10.4f  ${h.url}"))
       if (stats) {
-        // this call's segment reads: file reads, rows returned, bytes read,
-        // Parquet opens, parts decoded into the reader cache, and the
-        // cache's resident estimate
+        // this call's segment reads in this JVM (the driver's planning, and
+        // in local mode the kernel tasks' too): file reads, rows returned,
+        // bytes read, Parquet opens, parts decoded into the reader cache and
+        // the cache's resident estimate; then the kernel tasks' own reads,
+        // from the scan's metrics, wherever the tasks ran
         val d = SegmentFiles.Counters.snapshot.since(before)
+        val scan = SegmentScan.metricsOf(queries.map(_.executedPlan))
+        def m(k: String) = scan.getOrElse(k, 0L)
         println(s"stats: files=${d.files} rows=${d.rows} bytes=${d.bytes} opens=${d.opens} " +
-          s"decodes=${d.decodes} cachedBytes=${d.cachedBytes}")
+          s"decodes=${d.decodes} cachedBytes=${d.cachedBytes} scanRows=${m("rows")} " +
+          s"scanBytes=${m("bytes")} scanOpens=${m("opens")} scanDecodes=${m("decodes")}")
       }
     case "count" =>
       val dir = args(1)

@@ -9,7 +9,8 @@ import graft.ops.PipelineOps
   * shuffle and no-cartesian claims of each operator's scaladoc, asserted on
   * `queryExecution.executedPlan`'s string so a plan regression fails here.
   * (Query planning and kernel reads go through `SegmentFiles`, not Spark
-  * scans, so only the docmap fetch is a scan to check.)
+  * scans, so only the docmap fetch is a file scan to check; every
+  * kernel-running search call plans the one segment scan leaf.)
   */
 class PlanShapeSpec extends AnyFunSuite {
 
@@ -39,6 +40,35 @@ class PlanShapeSpec extends AnyFunSuite {
     // ReadSchema is cut at 100 characters; the scan's column list is not
     assert("FileScan parquet \\[[^\\]]*".r.findFirstIn(p)
       .exists(cols => cols.contains("term#") && !cols.contains("postings")), p)
+  }
+
+  test("every kernel-running call plans one segment scan leaf; its plan string stays short") {
+    import graft.search.{Query, SegmentScan}
+    val s = SparkEntry.searcherFor(spark, SfDir)
+    val q = Query.must(Query.Term("text", "spark"), Query.Term("text", "data"))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "topDocs" -> (() => s.topDocs(q, 10)),
+      "count" -> (() => s.count(q)),
+      "batchTopDocs" -> (() => s.batchTopDocs(Seq(q, Query.Term("text", "data")), 10)),
+      "batchCount" -> (() => s.batchCount(Seq(q, Query.Term("text", "data")))),
+      "allMatches" -> (() => s.allMatches(q).collect()),
+      "facetCounts" -> (() => s.facetCounts(q, "facet", "/")),
+      "termDocsAndPositions" -> (() => s.termDocsAndPositions("text", "spark").collect()))
+    for ((name, call) <- calls) {
+      val (_, qes) = SegmentScan.executedDuring(spark)(call())
+      val plans = qes.map(_.executedPlan.toString)
+      assert(plans.count(_.contains("SegmentScan segments=")) == 1, s"$name: $plans")
+      for (node <- Seq("Range", "MapPartitions", "WholeStageCodegen"); p <- plans)
+        assert(!p.contains(node), s"$name plans $node: $p")
+    }
+    // the plan string carries counts, never the compiled queries
+    val batch = (0 until 60).map(i => Query.should(Query.Term("text", "spark"), Query.Term("text", s"w$i")))
+    val (_, qes) = SegmentScan.executedDuring(spark)(s.batchTopDocs(batch, 10))
+    val Seq(qe) = qes
+    assert(qe.executedPlan.toString.length < 1024, qe.executedPlan.toString)
+    val formatted = qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(formatted.length < 1024, formatted)
+    assert(qe.executedPlan.toString.contains("queries=60"), qe.executedPlan.toString)
   }
 
   test("scan pushdown, broadcast LM / bench sides, shuffle-free maps") {

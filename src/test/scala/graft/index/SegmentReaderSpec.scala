@@ -13,7 +13,9 @@ import SegmentFiles._
   * is DictionarySpec's (a supplementary-plane character and one in
   * U+E000–U+FFFF, where UTF-16 and UTF-8 order disagree), and the index
   * holds a merged segment of several files beside the segments it
-  * merged.
+  * merged. Readers of files a merge deleted leave the cache when the
+  * index is listed again, or when a scan task of a searcher that listed it
+  * before they were deleted runs.
   */
 class SegmentReaderSpec extends AnyFunSuite {
 
@@ -159,6 +161,44 @@ class SegmentReaderSpec extends AnyFunSuite {
       val (again, n) = touch(a)
       assert(again == wantA && n > 0 && SegmentReader.resident == sa && Counters.cachedBytes.get == sa)
     }
+  }
+
+  test("a merge's dropped files leave the cache at the next listing; the new files stay decoded") {
+    val (d, m) = build()
+    def query() = fingerprint(new Searcher(spark, d))
+    val (held, merged, want) = SegmentReader.withBudget(Long.MaxValue) {
+      query()
+      val merged = SegmentMerger.merge(spark, d, SegmentMerger.plan(m, 4), keepOld = false)
+      val first = query()
+      val (again, n) = opens(query())
+      assert(again == first && n == 0, s"a repeated query opened $n files")
+      (SegmentReader.resident, merged, first)
+    }
+    assert(merged.segmentIds.intersect(m.segmentIds).isEmpty)
+    // the same queries on a fresh cache decode exactly the new files' parts
+    val fresh = SegmentReader.withBudget(Long.MaxValue) { assert(query() == want); SegmentReader.resident }
+    assert(held == fresh && held > 0)
+  }
+
+  test("a scan task drops readers of files deleted after its searcher listed the index") {
+    val (d, m) = build()
+    val (held, want) = SegmentReader.withBudget(Long.MaxValue) {
+      fingerprint(new Searcher(spark, d))
+      SegmentMerger.merge(spark, d, SegmentMerger.plan(m, 4), keepOld = true)
+      // s lists while the merged-away files are still on disk: their readers stay
+      val s = new Searcher(spark, d)
+      val first = fingerprint(s)
+      Snapshots.expire(spark, d, keepLast = 1)
+      assert(m.segmentIds.forall(id => !new java.io.File(s"$d/postings/segment=$id").exists))
+      // s lists no more; its kernel tasks drop the deleted files' readers
+      assert(fingerprint(s) == first)
+      (SegmentReader.resident, first)
+    }
+    val fresh = SegmentReader.withBudget(Long.MaxValue) {
+      assert(fingerprint(new Searcher(spark, d)) == want)
+      SegmentReader.resident
+    }
+    assert(held == fresh && held > 0)
   }
 
   test("a segment file rewritten at the same path is never served stale") {
